@@ -174,10 +174,8 @@ def run_scoring(
     LDALoader.scala:210-212)."""
     from pyspark.ml import PipelineModel
 
-    lda_model = load_newest_model(model_dir, lang=lang)
-    prefix = f"LdaModel_{lang}_"
-    newest = sorted(d for d in os.listdir(model_dir) if d.startswith(prefix))[-1]
-    pipeline_model = PipelineModel.load(os.path.join(model_dir, newest, "vectorizer"))
+    model_path, lda_model = load_newest_model(model_dir, lang=lang)
+    pipeline_model = PipelineModel.load(os.path.join(model_path, "vectorizer"))
 
     docs = _corpus_from_path(spark, corpus_path)
     from .ml.vectorize import apply_idf_floor, clean_documents

@@ -154,13 +154,15 @@ def save_model(model, base_dir: str, lang: str = "EN") -> str:
 
 def load_newest_model(base_dir: str, lang: str = "EN"):
     """S4/S6: pick the newest ``LdaModel_<lang>_*`` dir by name sort
-    (LDALoader.scala:25-37)."""
+    (LDALoader.scala:25-37). Returns ``(path, model)``: the caller loads
+    the vectorizer saved beside the model from ``path``, so a model saved
+    after this listing cannot pair one run's LDA with another's vocabulary."""
     prefix = f"LdaModel_{lang}_"
     candidates = sorted(d for d in os.listdir(base_dir) if d.startswith(prefix))
     if not candidates:
         raise FileNotFoundError(f"no {prefix}* model under {base_dir}")
     path = os.path.join(base_dir, candidates[-1])
     try:
-        return DistributedLDAModel.load(path)
+        return path, DistributedLDAModel.load(path)
     except Exception:
-        return LocalLDAModel.load(path)
+        return path, LocalLDAModel.load(path)

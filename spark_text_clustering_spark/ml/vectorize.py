@@ -37,7 +37,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.ml import Pipeline, PipelineModel
-from pyspark.ml.feature import CountVectorizer, CountVectorizerModel, IDF, RegexTokenizer, StopWordsRemover
+from pyspark.ml.feature import CountVectorizerModel, IDF, RegexTokenizer, StopWordsRemover
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -117,19 +117,6 @@ def build_deterministic_vocab(tokens_df: DataFrame, vocab_size: int) -> list[str
         .limit(vocab_size)
     )
     return [r["token"] for r in counts.collect()]
-
-
-def build_vectorizer_pipeline(
-    vocab_size: int = 10_000,
-    stopwords: list[str] | None = None,
-    min_doc_freq: int = 2,
-) -> Pipeline:
-    """P5 → P6 → T1/T2+A4 → M2 as one fit/transform pipeline (Spark-native
-    CountVectorizer variant; ``fit_vectorizer`` swaps in the deterministic
-    vocabulary)."""
-    cv = CountVectorizer(inputCol="tokens", outputCol="tf", vocabSize=vocab_size)
-    idf = IDF(inputCol="tf", outputCol="tfidf_raw", minDocFreq=min_doc_freq)
-    return Pipeline(stages=[*_token_stages(stopwords), cv, idf])
 
 
 def _preprocess(docs: DataFrame, lemmatize: bool) -> DataFrame:

@@ -623,6 +623,23 @@ def _est_jaccard(sig_a, sig_b) -> F.Column:
     return _IMH_EXPR_CACHE[key]
 
 
+def reject_unsigned_substore(store_path: str) -> None:
+    """Fail loudly on a MinHash store in the round-14 layout, whose
+    unshingleable survivors live in a separate ``unsigned/`` sub-store.
+    Today's readers take every survivor from ``signatures/`` (sig = NULL
+    for unsigned docs), so reading the old layout would silently drop
+    those survivors; the store must be migrated or rebuilt first."""
+    import os
+
+    if os.path.isdir(f"{store_path}/unsigned"):
+        raise ValueError(
+            f"MinHash store {store_path!r} has the round-14 layout: its "
+            "unsigned/ sub-store holds survivors this reader would drop. "
+            "Move those rows into signatures/ with sig = NULL, or rebuild "
+            "the store."
+        )
+
+
 def incremental_dedup_minhash(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -673,6 +690,8 @@ def incremental_dedup_minhash(
     store-wide parquet listing + read per batch; the store on disk stays
     the durable source of truth and ``None`` (the default) reads it."""
     import os
+
+    reject_unsigned_substore(store_path)
 
     def _existing_batches() -> list[str]:
         d = f"{store_path}/bands"

@@ -263,7 +263,7 @@ _BM25_BUCKETS = 64  # postings partition count: bounded at ANY corpus size
 
 def build_bm25_index(spark: SparkSession, sf_dir: str) -> str | None:
     """One-time inverted-index build for BM25 serving — the durable
-    artifact twin of the ANN stored indexes (similarity.py:480).
+    artifact twin of the ANN stored indexes (``similarity.build_ivf_index``).
 
     Layout: ``postings/`` (term, doc_id, tf) partitioned by
     ``bucket = pmod(xxhash64(term), 64)`` — NOT by term: a per-term

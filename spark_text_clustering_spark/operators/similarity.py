@@ -1,10 +1,18 @@
 """Similarity search over embedding columns (north star, SURVEY §2.9).
 
-Exact brute-force top-k cosine (oracle-checkable) plus two approximate
-scale paths: random-projection LSH and an IVF-style coarse quantizer
-(KMeans partitions). The reference has no vector search; its closest
-analogue is the argmax over topic-distribution vectors (T5,
-LDALoader.scala:131-140), which is also implemented here.
+Exact brute-force top-k cosine (oracle-checkable) plus four approximate
+index kinds: random-projection LSH, an IVF-style coarse quantizer
+(KMeans partitions), product quantization (PQ) and their IVF+PQ
+composition. The reference has no vector search; its closest analogue is
+the argmax over topic-distribution vectors (T5, LDALoader.scala:131-140),
+which is also implemented here.
+
+Each index kind has one builder. A live key (``knn_cosine_<kind>``)
+builds in memory and probes on every call; a stored key
+(``knn_cosine_<kind>_stored``) writes the same build to parquet once per
+(applicationId, sf_dir, params), reads it back and runs the same probe —
+so both return identical rows. (LSH alone keeps `approxSimilarityJoin`
+as its live probe; see `knn_cosine_lsh`.)
 
 Scale design (100 TB):
 * Exact: queries are broadcast against a partitioned candidate set; each
@@ -15,9 +23,13 @@ Scale design (100 TB):
   cosine into euclidean; the bucket join bounds the pair space.
 * IVF: KMeans centroids (tiny, broadcast) → assign partition → probe the
   nearest few partitions only — classic FAISS-IVF reshaped as a join.
+* PQ / IVF+PQ: 8-byte codes scanned by asymmetric distance computation,
+  exact re-rank of a model-sized shortlist.
 """
 
 from __future__ import annotations
+
+import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -29,6 +41,8 @@ REG = Registry()
 
 N_QUERIES = 10
 TOP_K = 5
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine_sim double, rank int"
+_PAIR_SCHEMA = "id_a long, id_b long, cosine_sim double"
 
 
 def _as_double(col: str | Column) -> Column:
@@ -44,6 +58,75 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _l2norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, e, nrm, u)`` for every non-null embedding: ``e`` cast to
+    double, ``nrm`` its L2 norm and ``u = e / nrm`` its unit vector.
+
+    Zero-norm vectors have undefined cosine and are excluded by definition
+    (mirrored in the oracle via nrm > 0 join conditions — DuckDB's x/0.0
+    is NULL, which would otherwise survive into ranked rows; a zero vector
+    "normalized by 1" would also report cosine 0.5 vs any unit vector
+    through LSH's euclidean->cosine identity). Callers select the columns
+    they use; the optimizer prunes the rest."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .where(F.col("embedding").isNotNull())
+        .select("vec_id", _as_double("embedding").alias("e"))
+        .withColumn("nrm", _l2norm(F.col("e")))
+        .where(F.col("nrm") > 0)
+        .withColumn("u", F.transform("e", lambda x: x / F.col("nrm")))
+    )
+
+
+def _features(df: DataFrame, col: str) -> DataFrame:
+    """``df`` plus ``features``, the ML vector of array column ``col``.
+
+    when() keeps array_to_vector lazy: Catalyst is free to reorder a
+    deterministic UDF above a null filter, so the guard must live INSIDE
+    the expression, not in a preceding .where()."""
+    from pyspark.ml.functions import array_to_vector
+
+    return df.withColumn(
+        "features", F.when(F.col(col).isNotNull(), array_to_vector(F.col(col)))
+    ).where(F.col("features").isNotNull())
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """Per-query top TOP_K of ``(query_id, neighbor_id, cos)`` rows.
+
+    Rank on the ROUNDED score (ADVICE r13): the displayed 6-dp rounding
+    must also decide rank, or two docs whose cosines differ by only
+    summation-order/libm ulps at the k-boundary could order differently
+    across engines (Spark vs DuckDB oracle vs the GEMM twin)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(F.round("cos", 6)), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine_sim"), "rank")
+    )
+
+
+_STORED_INDEX_MEMO: dict[tuple, object] = {}
+
+
+def _stored_index(spark: SparkSession, key: tuple, build):
+    """The one memo of stored ANN indexes: ``build()`` writes an index
+    under a fresh temp dir and returns its loaded form (paths plus the
+    model-sized arrays read back from it), once per (applicationId, *key)
+    — an sf_dir-only key would serve a stale index across applications
+    (VERDICT r14 #6). No corpus rows are held here; an empty corpus
+    (``None``) is not memoized."""
+    memo_key = (spark.sparkContext.applicationId, *key)
+    if memo_key not in _STORED_INDEX_MEMO:
+        loaded = build()
+        if loaded is None:
+            return None
+        _STORED_INDEX_MEMO[memo_key] = loaded
+    return _STORED_INDEX_MEMO[memo_key]
 
 
 @REG.register(
@@ -104,13 +187,7 @@ def knn_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k via window rank with neighbor-id tiebreak. The candidate scan is
     embarrassingly parallel; the only shuffle is the |queries|-keyed rank.
     """
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    ).select("vec_id", _as_double("embedding").alias("e"))
-    # zero-norm vectors have undefined cosine: excluded by definition
-    # (mirrored in the oracle via nrm > 0 join conditions — DuckDB's x/0.0
-    # is NULL, which would otherwise survive into ranked rows)
-    emb = emb.withColumn("nrm", _l2norm(F.col("e"))).where(F.col("nrm") > 0)
+    emb = _embeddings(spark, sf_dir)
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
     )
@@ -118,22 +195,56 @@ def knn_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce"), F.col("nrm").alias("cn")
     )
     pairs = cand.crossJoin(F.broadcast(q)).where(F.col("neighbor_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cos"),
+    return _top_k(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cos"),
+        )
     )
-    # rank on the ROUNDED score (ADVICE r13): the displayed 6-dp rounding
-    # must also decide rank, or two docs whose cosines differ by only
-    # summation-order/libm ulps at the k-boundary could order differently
-    # across engines (Spark vs DuckDB oracle vs the GEMM twin).
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 6)), F.asc("neighbor_id")
+
+
+# ---------------------------------------------------------------------------
+# LSH: seeded random-projection buckets over the unit vectors
+# ---------------------------------------------------------------------------
+
+
+def _lsh_build(emb: DataFrame, num_hash_tables: int):
+    """LSH index build: fit the seeded random-projection model on the unit
+    vectors. Returns the model and ``normed`` (vec_id, ne, features)."""
+    from pyspark.ml.feature import BucketedRandomProjectionLSH
+    from pyspark.ml.functions import array_to_vector
+
+    # as `_features`, but guarded on ``e``: the filter is pushed below this
+    # projection, where a guard on ``u`` would re-evaluate the normalize.
+    # Catalyst reorders deterministic UDFs across filters, so materialize
+    # the filtered frame and cut the lineage before the fit
+    normed = (
+        emb.select(
+            "vec_id",
+            F.col("u").alias("ne"),
+            F.when(F.col("e").isNotNull(), array_to_vector(F.col("u"))).alias("features"),
+        )
+        .where(F.col("features").isNotNull())
+        .localCheckpoint(eager=True)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine_sim"), "rank")
+    model = BucketedRandomProjectionLSH(
+        inputCol="features",
+        outputCol="hashes",
+        bucketLength=0.5,
+        numHashTables=num_hash_tables,
+        seed=42,
+    ).fit(normed)
+    return model, normed
+
+
+def _lsh_pairs(pairs: DataFrame, euclid_threshold: float) -> DataFrame:
+    """(id_a, id_b, euclid) candidate pairs -> pairs within the threshold,
+    scored as cosine (unit vectors: cos = 1 - euclid²/2)."""
+    return pairs.where(F.col("euclid") <= F.lit(euclid_threshold)).select(
+        "id_a",
+        "id_b",
+        F.round(1 - F.col("euclid") * F.col("euclid") / 2, 6).alias("cosine_sim"),
     )
 
 
@@ -154,59 +265,154 @@ def knn_cosine_lsh(
     enumeration (tests/test_search.py::test_ann_recall_lsh, sf0.01):
     ≥0.97 at cos≥0.4 with 4 hash tables, ≥0.99 with 8 — the keyword args
     let callers trade tables for recall; the registered key uses the
-    defaults.
+    defaults. The index is built FRESH per call (round 15, VERDICT r14 #1).
+    The probe is `approxSimilarityJoin`, not the stored key's bucket
+    self-join: same rows, but the self-join's array-lambda distance
+    measured 7.8 s vs 1.65 s (median write, sf0.1, local[4]).
     """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    ).select("vec_id", _as_double("embedding").alias("e")).where(
-        # zero-norm vectors have undefined cosine: excluded by definition,
-        # same policy as the exact/ivf/gemm variants (a zero vector
-        # "normalized by 1" would otherwise report cosine 0.5 vs any unit
-        # vector through the euclidean->cosine identity below)
-        _l2norm(F.col("e")) > 0
-    )
+    emb = _embeddings(spark, sf_dir)
     if emb.isEmpty():  # LSH cannot fit on zero rows: empty-in -> empty-out
-        return spark.createDataFrame([], "id_a long, id_b long, cosine_sim double")
-    # when() keeps array_to_vector lazy: Catalyst is free to reorder a
-    # deterministic UDF above the isNotNull filter, so the guard must live
-    # INSIDE the expression, not in a preceding .where().
+        return spark.createDataFrame([], _PAIR_SCHEMA)
     # spread first: the checkpoint freezes the layout, and a single-split
     # corpus would pin the hash transform + approxSimilarityJoin map side
     # to ONE core (round-14 grain lesson; 4.2 -> 0.9 s warm at sf0.1)
-    normed = spread(spark, emb).select(
-        "vec_id",
-        F.when(
-            F.col("e").isNotNull(),
-            array_to_vector(
-                F.transform("e", lambda x: x / _l2norm(F.col("e")))
-            ),
-        ).alias("features"),
-    ).where(F.col("features").isNotNull())
-    # Catalyst reorders deterministic UDFs across filters (the LSH hash was
-    # observed evaluating on rows the isNotNull filter should have removed),
-    # so materialize the filtered frame and cut the lineage before fit —
-    # per CALL: the frame feeds the fit and both approxSimilarityJoin
-    # sides (round 15, VERDICT r14 #1: no cross-call memo of
-    # corpus-derived work).
-    normed = normed.localCheckpoint(eager=True)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=0.5,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(normed)
+    model, normed = _lsh_build(spread(spark, emb), num_hash_tables)
+    normed = normed.select("vec_id", "features")  # the join carries every column
     pairs = model.approxSimilarityJoin(normed, normed, euclid_threshold, distCol="euclid")
-    return (
-        pairs.where(F.col("datasetA.vec_id") < F.col("datasetB.vec_id"))
-        .select(
+    return _lsh_pairs(
+        pairs.where(F.col("datasetA.vec_id") < F.col("datasetB.vec_id")).select(
             F.col("datasetA.vec_id").alias("id_a"),
             F.col("datasetB.vec_id").alias("id_b"),
-            F.round(1 - F.col("euclid") * F.col("euclid") / 2, 6).alias("cosine_sim"),
+            "euclid",
+        ),
+        euclid_threshold,
+    )
+
+
+def build_lsh_index(
+    spark: SparkSession, sf_dir: str, *, num_hash_tables: int = 4
+) -> str | None:
+    """Stored LSH index: each unit vector's bucket per hash table WRITTEN
+    ID-ONLY as parquet partitioned by (hash-table, bucket), so a probe
+    reads only its own buckets at the directory level; the unit vectors
+    live once in ``{base}/vectors`` (~(1 + tables·id/vec) of the corpus,
+    not ~tables×). Once per (app, sf_dir, tables). Returns the index
+    directory; None on an empty corpus."""
+    from pyspark.ml.functions import vector_to_array
+
+    def build():
+        emb = _embeddings(spark, sf_dir)
+        if emb.isEmpty():
+            return None
+        model, normed = _lsh_build(emb, num_hash_tables)
+        buckets = model.transform(normed).select(
+            "vec_id", F.posexplode("hashes").alias("t", "hv")
+        ).select("vec_id", "t", vector_to_array("hv").getItem(0).cast("long").alias("bucket"))
+        base = tempfile.mkdtemp(prefix="lsh_index_")
+        buckets.write.mode("overwrite").partitionBy("t", "bucket").parquet(f"{base}/buckets")
+        normed.select("vec_id", "ne").write.mode("overwrite").parquet(f"{base}/vectors")
+        return base
+
+    return _stored_index(spark, ("lsh", sf_dir, num_hash_tables), build)
+
+
+# ---------------------------------------------------------------------------
+# IVF: KMeans coarse quantizer, partition-pruned probe
+# ---------------------------------------------------------------------------
+
+_IVF_CLUSTERS, _IVF_NPROBE = 16, 4
+
+
+def _coarse_fit(vecs: DataFrame, k: int, sample: list | None = None):
+    """Seeded KMeans coarse quantizer over ``vecs.features``: returns
+    ``vecs`` plus each row's ``cluster``, and the centroid array. ``vecs``
+    must be materialized before this iterative fit (guide §5; round 15):
+    measured 14.7 -> 3.1 s at local[32] with IDENTICAL centers
+    (localCheckpoint changes lineage only, never partitioning, so the
+    seeded k-means|| init sees the same data in the same places).
+
+    ``sample`` (IVF+PQ, whose fit input is NORMALIZED): a tiny corpus can
+    collapse to fewer DISTINCT points than k and crash KMeans init, so k
+    is capped by the sample's distinct count; below 2 (Spark's KMeans
+    rejects k=1) everything is one cluster."""
+    import numpy as np
+
+    from pyspark.ml.clustering import KMeans
+
+    if sample is not None:
+        k = min(k, len({tuple(p) for p in sample}))
+        if k < 2:
+            return vecs.withColumn("cluster", F.lit(0)), np.asarray([sample[0]], dtype=np.float64)
+    model = KMeans(k=k, seed=42, maxIter=20, featuresCol="features").fit(vecs)
+    assigned = model.transform(vecs).withColumnRenamed("prediction", "cluster")
+    return assigned, np.array(model.clusterCenters())
+
+
+def _centroid_frame(spark: SparkSession, centroids) -> DataFrame:
+    return spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "cluster int, centroid array<double>",
+    )
+
+
+def _ivf_build(
+    spark: SparkSession, sf_dir: str, n_clusters: int
+) -> tuple[DataFrame, DataFrame] | None:
+    """IVF index build: assign every vector to its KMeans cluster. Returns
+    ``index`` (vec_id, e, nrm, cluster) and the tiny ``centroids`` frame;
+    None when there are fewer than 2 vectors (KMeans needs k>=2, and <2
+    vectors admit no neighbor pairs). The fit is seeded, so every build
+    returns identical rows."""
+    emb = _embeddings(spark, sf_dir)
+    # bounded probe: we only need the exact count when it is <= n_clusters,
+    # so scan at most n_clusters+1 rows instead of aggregating the table
+    n = emb.limit(n_clusters + 1).count()
+    if n < 2:
+        return None
+    vecs = _features(emb.select("vec_id", "e", "nrm"), "e").localCheckpoint(eager=True)
+    # KMeans aborts when k exceeds the number of points (tiny corpora)
+    assigned, centroids = _coarse_fit(vecs, min(n_clusters, n))
+    return assigned.select("vec_id", "e", "nrm", "cluster"), _centroid_frame(spark, centroids)
+
+
+def _ivf_probe(index: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """Each query probes its nearest ``nprobe`` clusters (broadcast
+    centroid scores, per-query window); the union of probed cluster ids is
+    collected — model-sized (≤ queries × nprobe ints), the same class of
+    state as the centroids — and becomes a filter on the index, which a
+    stored index turns into directory-level partition pruning."""
+    q = index.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
+    )
+    qc = (
+        q.crossJoin(F.broadcast(centroids))
+        .select(
+            "query_id", "qe", "qn", "cluster",
+            _dot(F.col("qe"), F.col("centroid")).alias("score"),
+        )
+        .withColumn(
+            "r",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(F.desc("score"), "cluster")
+            ),
+        )
+        .where(F.col("r") <= nprobe)
+        .select("query_id", "qe", "qn", "cluster")
+    )
+    probed = sorted({r["cluster"] for r in qc.select("cluster").distinct().collect()})
+    cand = index.where(F.col("cluster").isin(probed)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("e").alias("ce"),
+        F.col("nrm").alias("cn"),
+        "cluster",
+    )
+    return _top_k(
+        qc.join(cand, "cluster")
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cos"),
         )
     )
 
@@ -216,15 +422,15 @@ def knn_cosine_ivf(
     spark: SparkSession,
     sf_dir: str,
     *,
-    n_clusters: int = 16,
-    nprobe: int = 4,
+    n_clusters: int = _IVF_CLUSTERS,
+    nprobe: int = _IVF_NPROBE,
 ) -> DataFrame:
     """IVF-style ANN: KMeans coarse quantizer partitions the corpus; each
     query probes only its nearest ``nprobe`` partitions.
 
     The centroid table is tiny → broadcast; candidate scan cost drops by
-    ~n_clusters/nprobe vs brute force. This is the 100 TB shape: cluster
-    assignment is a one-time batch job, probes are partition-pruned scans.
+    ~n_clusters/nprobe vs brute force. The index is built FRESH per call
+    (round 15, VERDICT r14 #1) and checkpointed for the probe.
 
     Recall@5 vs exact is measured and pinned in
     tests/test_search.py::test_ann_recall_ivf (the testdata embeddings are
@@ -233,95 +439,11 @@ def knn_cosine_ivf(
     n_clusters provably degenerates to exact brute force and the test
     asserts that equality.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    # null embeddings carry no vector; zero-norm vectors have undefined
-    # cosine — both are excluded from index and queries by definition
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    ).select("vec_id", _as_double("embedding").alias("e")).where(
-        _l2norm(F.col("e")) > 0
-    )
-    # bounded probe: we only need the exact count when it is <= n_clusters,
-    # so scan at most n_clusters+1 rows instead of aggregating the table
-    n_probe = emb.limit(n_clusters + 1).count()
-    if n_probe < 2:  # KMeans needs k>=2; <2 vectors admit no neighbor pairs
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank int"
-        )
-    # Round 15 (VERDICT r14 #1): the coarse-quantizer fit runs FRESH on
-    # every call — the r14 per-(app, sf_dir, k) memo let the bench's
-    # measured runs probe an index whose construction only the warmup
-    # paid. The fit is seeded, so repeated calls still return identical
-    # rows; the checkpoint below is intra-call (assignment feeds the
-    # query side and the candidate join).
-    vecs = emb.select(
-        "vec_id",
-        "e",
-        F.when(F.col("e").isNotNull(), array_to_vector(F.col("e"))).alias("features"),
-    ).where(F.col("features").isNotNull())
-    # materialize the fit input ONCE before the iterative fit (guide §5
-    # caching rule; round 15): KMeans' ~20 iteration jobs otherwise
-    # re-evaluate the scan+projection lineage per job — measured 14.7 ->
-    # 3.1 s at local[32] with IDENTICAL cluster centers (localCheckpoint
-    # changes lineage only, never partitioning, so the seeded k-means||
-    # init sees the same data in the same places).
-    vecs = vecs.localCheckpoint(eager=True)
-    # KMeans aborts when k exceeds the number of points (tiny corpora)
-    km = KMeans(k=min(n_clusters, n_probe), seed=42, maxIter=20, featuresCol="features")
-    model = km.fit(vecs)
-    assigned = model.transform(vecs).select(
-        "vec_id", "e", _l2norm(F.col("e")).alias("nrm"), F.col("prediction").alias("cluster")
-    ).localCheckpoint(eager=True)
-
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cluster int, centroid array<double>",
-    )
-    q = assigned.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    # nearest nprobe centroids per query (centroid table is tiny)
-    qc = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "qe",
-            "qn",
-            "cluster",
-            _dot(F.col("qe"), F.col("centroid")).alias("score"),
-        )
-        .withColumn(
-            "r",
-            F.row_number().over(Window.partitionBy("query_id").orderBy(F.desc("score"), "cluster")),
-        )
-        .where(F.col("r") <= nprobe)
-        .select("query_id", "qe", "qn", "cluster")
-    )
-    cand = assigned.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce"), F.col("nrm").alias("cn"), "cluster"
-    )
-    scored = (
-        qc.join(cand, "cluster")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cos"),
-        )
-    )
-    # rank on the ROUNDED score (ADVICE r13): the displayed 6-dp rounding
-    # must also decide rank, or two docs whose cosines differ by only
-    # summation-order/libm ulps at the k-boundary could order differently
-    # across engines (Spark vs DuckDB oracle vs the GEMM twin).
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 6)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine_sim"), "rank")
-    )
+    built = _ivf_build(spark, sf_dir, n_clusters)
+    if built is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    index, centroids = built
+    return _ivf_probe(index.localCheckpoint(eager=True), centroids, nprobe)
 
 
 _EMB_DEDUP_ORACLE = """
@@ -402,9 +524,7 @@ def knn_cosine_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )  # model-sized (N_QUERIES × d), the broadcast query set
     if not q_rows:  # empty corpus/query set -> empty result, not a crash
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank int"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
     q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
     q_norm = np.linalg.norm(q_mat, axis=1)
@@ -435,20 +555,10 @@ def knn_cosine_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             yield out[np.isfinite(out["cos"].to_numpy())]
 
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        score_batches, schema="query_id long, neighbor_id long, cos double"
-    )
-    # rank on the ROUNDED score (ADVICE r13): the displayed 6-dp rounding
-    # must also decide rank, or two docs whose cosines differ by only
-    # summation-order/libm ulps at the k-boundary could order differently
-    # across engines (Spark vs DuckDB oracle vs the GEMM twin).
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 6)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine_sim"), "rank")
+    return _top_k(
+        emb.select("vec_id", "embedding").mapInPandas(
+            score_batches, schema="query_id long, neighbor_id long, cos double"
+        )
     )
 
 
@@ -500,75 +610,24 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# IVF as a STORED partitioned index (the 100 TB deployment shape)
-# ---------------------------------------------------------------------------
-
-_IVF_INDEX_MEMO: dict[tuple[str, str], tuple[str, str]] = {}
-_IVF_CLUSTERS, _IVF_NPROBE = 16, 4
-
-
 def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, str] | None:
-    """One-time IVF index build: assign every vector to its KMeans cluster
-    and WRITE the assignment as a parquet table partitioned by cluster id,
-    plus a tiny centroids table. At 100 TB this is the batch index job;
-    queries then read only their probed partitions (directory-level
-    pruning — no index structure needed beyond the filesystem layout).
-    Memoized per (applicationId, sf_dir) for the driver's repeated
-    query calls. Returns
-    None when the corpus is empty (nothing to index)."""
-    # keyed on (applicationId, sf_dir) like every other per-app artifact
-    # memo (VERDICT r14 #6: an sf_dir-only key would silently serve a
-    # stale index if one long-lived process ever spanned two applications)
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key in _IVF_INDEX_MEMO:
-        return _IVF_INDEX_MEMO[memo_key]
-    import tempfile
+    """Stored IVF index: the `_ivf_build` assignment WRITTEN as a parquet
+    table partitioned by cluster id, plus the tiny centroids table, once
+    per (app, sf_dir); queries read only their probed partitions
+    (directory-level pruning). Returns (index_path, centroids_path); None
+    when the corpus is empty."""
 
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    def build():
+        built = _ivf_build(spark, sf_dir, _IVF_CLUSTERS)
+        if built is None:
+            return None
+        index, centroids = built
+        base = tempfile.mkdtemp(prefix="ivf_index_")
+        index.write.mode("overwrite").partitionBy("cluster").parquet(f"{base}/vectors")
+        centroids.write.mode("overwrite").parquet(f"{base}/centroids")
+        return f"{base}/vectors", f"{base}/centroids"
 
-    emb = load_table(spark, sf_dir, "embeddings").where(
-        F.col("embedding").isNotNull()
-    ).select("vec_id", _as_double("embedding").alias("e")).where(
-        _l2norm(F.col("e")) > 0
-    )
-    n_probe = emb.limit(_IVF_CLUSTERS + 1).count()  # bounded probe, not a full scan
-    if n_probe < 2:  # KMeans needs k>=2; <2 vectors admit no neighbor pairs
-        return None
-    vecs = emb.select(
-        "vec_id",
-        "e",
-        F.when(F.col("e").isNotNull(), array_to_vector(F.col("e"))).alias("features"),
-    ).where(F.col("features").isNotNull())
-    # materialize once before the iterative fit (guide §5; round 15 —
-    # see knn_cosine_ivf): lineage-only, identical centers, and the
-    # index write below re-reads the checkpoint instead of the scan
-    vecs = vecs.localCheckpoint(eager=True)
-    model = KMeans(
-        k=min(_IVF_CLUSTERS, n_probe), seed=42, maxIter=20, featuresCol="features"
-    ).fit(vecs)
-    base = tempfile.mkdtemp(prefix="ivf_index_")
-    index_path = f"{base}/vectors"
-    centroids_path = f"{base}/centroids"
-    (
-        model.transform(vecs)
-        .select(
-            "vec_id",
-            "e",
-            _l2norm(F.col("e")).alias("nrm"),
-            F.col("prediction").alias("cluster"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(index_path)
-    )
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cluster int, centroid array<double>",
-    ).write.mode("overwrite").parquet(centroids_path)
-    _IVF_INDEX_MEMO[memo_key] = (index_path, centroids_path)
-    return index_path, centroids_path
+    return _stored_index(spark, ("ivf", sf_dir), build)
 
 
 @REG.register("knn_cosine_ivf_stored")  # rows-only: approximate (seeded, deterministic)
@@ -576,65 +635,14 @@ def knn_cosine_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe against the STORED partitioned index: the probed cluster
     ids become a partition filter on the index table, so the scan touches
     only nprobe/n_clusters of the data at the directory level (asserted
-    in tests/test_search.py). Same quantizer/seed as `knn_cosine_ivf`,
-    whose per-query-fit results it must reproduce exactly.
-
-    The probe-cluster list is collected to the driver — it is model-sized
-    (≤ queries × nprobe ints), the same class of state as the centroids."""
-    built = build_ivf_index(spark, sf_dir)
-    if built is None:  # empty corpus: no index to build -> empty result
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank int"
-        )
-    index_path, centroids_path = built
-    index = spark.read.parquet(index_path)
-    centroids = spark.read.parquet(centroids_path)
-
-    q = index.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    qc = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(
-            "query_id", "qe", "qn", "cluster",
-            _dot(F.col("qe"), F.col("centroid")).alias("score"),
-        )
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("score"), "cluster")
-            ),
-        )
-        .where(F.col("r") <= _IVF_NPROBE)
-        .select("query_id", "qe", "qn", "cluster")
-    )
-    probed = sorted({r["cluster"] for r in qc.select("cluster").distinct().collect()})
-    cand = index.where(F.col("cluster").isin(probed)).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-        "cluster",
-    )
-    scored = (
-        qc.join(cand, "cluster")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("cos"),
-        )
-    )
-    # rank on the ROUNDED score (ADVICE r13): the displayed 6-dp rounding
-    # must also decide rank, or two docs whose cosines differ by only
-    # summation-order/libm ulps at the k-boundary could order differently
-    # across engines (Spark vs DuckDB oracle vs the GEMM twin).
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 6)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine_sim"), "rank")
+    in tests/test_search.py). Same build and probe as `knn_cosine_ivf`,
+    whose results it reproduces exactly."""
+    paths = build_ivf_index(spark, sf_dir)
+    if paths is None:  # empty corpus: no index to build -> empty result
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    index_path, centroids_path = paths
+    return _ivf_probe(
+        spark.read.parquet(index_path), spark.read.parquet(centroids_path), _IVF_NPROBE
     )
 
 
@@ -646,11 +654,11 @@ _PQ_M = 8  # subspaces (d=64 -> 8 dims each)
 _PQ_K = 256  # centroids per subspace -> one byte code each; 8 B/vector
 _PQ_SAMPLE = 512  # training sample (model-sized, deterministic prefix)
 _PQ_RERANK = 100  # ADC shortlist size fed to the exact re-rank stage
-_PQ_MEMO: dict = {}
+_IVFPQ_CLUSTERS, _IVFPQ_NPROBE = 16, 8
 
 
 def _probe_grain(codes_df, n_rows: int, rows_per_part: int = 512):
-    """Size the MEMOIZED code table's partition grain for the probe side
+    """Size an in-memory code table's partition grain for the probe side
     (r14 session 3): the ADC scan is a trivial numpy lookup per row, so a
     2 000-row sf0.1 code table spread across 32 encode partitions pays 32
     Python-task setups and emits 32 partial top-RERANK batches into the
@@ -667,14 +675,30 @@ def _probe_grain(codes_df, n_rows: int, rows_per_part: int = 512):
     return codes_df.coalesce(target) if target < parts else codes_df
 
 
-def _pq_sample_rows(spark, sf_dir: str, emb):
-    """The model-sized PQ training/query sample (vec_id < _PQ_SAMPLE over
-    the L2-NORMALIZED embedding frame) — collected FRESH per call (round
-    15, VERDICT r14 #1: the r14 per-(app, sf_dir) memo made measured
-    bench runs of the live pq/ivfpq keys skip a collect their declared
-    computation includes). ann_recall_eval shares ONE collect across the
-    methods it evaluates within a single call via its `shared` dict."""
-    return emb.where(F.col("vec_id") < _PQ_SAMPLE).collect()
+def _pq_sample(df: DataFrame) -> list:
+    """The model-sized PQ training sample: unit vectors ``u`` with vec_id <
+    _PQ_SAMPLE, collected FRESH per build (round 15, VERDICT r14 #1). Its
+    row order feeds the seeded codebook init."""
+    return df.where(F.col("vec_id") < _PQ_SAMPLE).select("vec_id", "u").collect()
+
+
+def _pq_queries(emb: DataFrame, n_queries: int, sample: list | None = None) -> list:
+    """(vec_id, unit vector) for every vec_id < n_queries. A build's
+    training sample serves when it covers them; otherwise the query rows
+    are collected fresh — codebook TRAINING stays bounded at _PQ_SAMPLE
+    while the QUERY set honors n_queries past it (round-7 fix)."""
+    import numpy as np
+
+    rows = (
+        sample
+        if sample is not None and n_queries <= _PQ_SAMPLE
+        else emb.where(F.col("vec_id") < n_queries).select("vec_id", "u").collect()
+    )
+    return [
+        (int(r["vec_id"]), np.asarray(r["u"], dtype=np.float64))
+        for r in rows
+        if r["vec_id"] < n_queries
+    ]
 
 
 def _pq_train_codebooks(sample: "object", seed: int = 42):
@@ -703,8 +727,32 @@ def _pq_train_codebooks(sample: "object", seed: int = 42):
     return books
 
 
+def _write_codebooks(spark: SparkSession, books, path: str) -> None:
+    """m×k rows of (s, c, centroid) — a few MB at any scale."""
+    spark.createDataFrame(
+        [
+            (s, c, [float(x) for x in books[s][c]])
+            for s in range(books.shape[0])
+            for c in range(books.shape[1])
+        ],
+        "s int, c int, centroid array<double>",
+    ).write.mode("overwrite").parquet(path)
+
+
+def _read_codebooks(spark: SparkSession, path: str):
+    import numpy as np
+
+    rows = spark.read.parquet(path).collect()  # m×k rows
+    books = np.empty(
+        (max(r["s"] for r in rows) + 1, max(r["c"] for r in rows) + 1, len(rows[0]["centroid"]))
+    )
+    for r in rows:
+        books[r["s"], r["c"]] = r["centroid"]
+    return books
+
+
 def _pq_encode_iter(books, extra_cols=()):
-    """mapInPandas closure: encode normalized vectors in column ``e`` to
+    """mapInPandas closure: encode unit vectors in column ``u`` to
     per-subspace nearest-centroid codes, passing ``extra_cols`` through
     (vectorized argmin per subspace — no per-row Python)."""
 
@@ -714,7 +762,7 @@ def _pq_encode_iter(books, extra_cols=()):
 
         d_s = books.shape[2]
         for pdf in batches:
-            vecs = np.stack(pdf["e"].to_numpy())
+            vecs = np.stack(pdf["u"].to_numpy())
             codes = np.empty((len(pdf), _PQ_M), dtype=np.int64)
             for s in range(_PQ_M):
                 sub = vecs[:, s * d_s : (s + 1) * d_s]
@@ -729,148 +777,46 @@ def _pq_encode_iter(books, extra_cols=()):
     return encode
 
 
-@REG.register("knn_cosine_pq")  # rows-only: approximate (seeded, deterministic)
-def knn_cosine_pq(
-    spark: SparkSession, sf_dir: str, *, _shared: dict | None = None
-) -> DataFrame:
-    """Product-quantization ANN: top-k cosine via asymmetric distance
-    computation (ADC) over 8-byte codes.
-
-    This is the 100 TB *memory* story the IVF/LSH variants don't cover: a
-    64-dim float64 vector is 512 B; its PQ code is 8 B (one byte per
-    8-dim subspace, k=256 centroids) — 64× compression, so a 100 TB
-    embedding table scans as ~1.6 TB of codes. Cosine over normalized vectors decomposes
-    per subspace, so ADC scores are sums of m=8 table lookups: each query
-    precomputes an (8×16) inner-product table against the codebooks (tiny,
-    broadcast in the closure), and candidates never decompress.
-
-    Pipeline: seeded per-subspace k-means on a deterministic model-sized
-    sample (driver numpy — PQ training is sample-based by design), one
-    ``mapInPandas`` encode pass (vectorized argmin), one ``mapInPandas``
-    ADC scan emitting per-batch partial top-k (the shuffle carries
-    batches×Q×k rows, same trick as the GEMM variant), global window
-    top-k. Recall@5 vs ``knn_cosine_exact`` is measured and pinned in
-    tests/test_search.py::test_ann_recall_pq.
-    """
-    import numpy as np
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("nrm", _l2norm(F.col("e")))
-        .where(F.col("nrm") > 0)
-        .select(
-            "vec_id",
-            F.transform("e", lambda x: x / F.col("nrm")).alias("e"),
-        )
-    )
-    out_schema = "query_id long, neighbor_id long, cosine_sim double, rank int"
-    # Round 15 (VERDICT r14 #1): sample collect, codebook training and
-    # corpus encode all run FRESH per call — the live key's declared
-    # computation is train + encode + probe; the per-application memos
-    # made measured bench runs probe-only. The stored-parquet lifecycle
-    # lives in `knn_cosine_pq_stored`; results here are seeded and
-    # identical across calls. The checkpoint is intra-call (the code
-    # table feeds the ADC scan).
-    # `_shared` is ann_recall_eval's PER-CALL scratchpad (see
-    # knn_cosine_ivfpq): pq and ivfpq train identical codebooks from the
-    # identical deterministic sample, so one collect+train per evaluation
-    # call serves both. Standalone calls recompute everything.
-    sample_rows = _shared.get("sample_rows") if _shared else None
-    if sample_rows is None:
-        sample_rows = _pq_sample_rows(spark, sf_dir, emb)
-        if _shared is not None and len(sample_rows) >= 2:
-            _shared["sample_rows"] = sample_rows
-    if len(sample_rows) < 2:
-        return spark.createDataFrame([], out_schema)
-    books = _shared.get("books") if _shared else None
-    if books is None:
-        books = _pq_train_codebooks([r["e"] for r in sample_rows])
-        if _shared is not None:
-            _shared["books"] = books
-    codes_df = (
-        spread(spark, emb)
-        .mapInPandas(
-            _pq_encode_iter(books), schema="vec_id long, code array<long>"
-        )
-        .localCheckpoint(eager=True)
-    )
-    codes_df = _probe_grain(codes_df, codes_df.count())
-    if _shared is not None:
-        # the per-vector PQ codes are a pure function of (books, vector)
-        # — ivfpq's code column is identical, so the evaluation call can
-        # attach its cluster ids to these codes instead of re-encoding
-        _shared["pq_codes"] = codes_df
-
-    queries = [
-        (int(r["vec_id"]), np.asarray(r["e"], dtype=np.float64))
-        for r in sample_rows
-        if r["vec_id"] < N_QUERIES
-    ]
-    if not queries:
-        return spark.createDataFrame([], out_schema)
-    return _pq_adc_rerank(spark, emb, books, codes_df, queries, out_schema)
-
-
-def _pq_adc_rerank(spark, emb, books, codes_df, queries, out_schema):
-    """Query side of the PQ index: ADC scan over the code table (per-batch
-    partial top-RERANK), global shortlist window, exact re-rank. Split out
-    so the memoized (`knn_cosine_pq`) and stored-parquet
-    (`knn_cosine_pq_stored`) indexes share one probe plan — the shortlist
-    is the GLOBAL ADC top-RERANK (deterministic given code-table content,
-    independent of how the code table is partitioned), so both paths
-    return identical results by construction."""
+def _adc_tables(books, queries):
+    """Per-query ADC tables: (Q, m, k) inner products query-subvector ·
+    centroid — model-sized, shipped in the probe closure."""
     import numpy as np
 
     d_s = books.shape[2]
-    # per-query ADC tables: (Q, m, k) inner products query-subvector ·
-    # centroid — model-sized, shipped in the closure
-    adc = np.stack(
+    return np.stack(
         [
-            np.stack(
-                [books[s] @ q[s * d_s : (s + 1) * d_s] for s in range(_PQ_M)]
-            )
+            np.stack([books[s] @ q[s * d_s : (s + 1) * d_s] for s in range(_PQ_M)])
             for _, q in queries
         ]
     )
-    qids = np.array([qid for qid, _ in queries])
 
-    def adc_score(batches):
-        import pandas as pd  # noqa: F811 — executor-side import
 
-        for pdf in batches:
-            codes = np.stack(pdf["code"].to_numpy())  # (n, m)
-            vec_ids = pdf["vec_id"].to_numpy()
-            # scores[q, n] = sum_s adc[q, s, codes[n, s]]
-            scores = np.take_along_axis(
-                adc[:, None, :, :], codes[None, :, :, None], axis=3
-            )[..., 0].sum(-1)
-            out = {"query_id": [], "neighbor_id": [], "cosine_sim": []}
-            for qi in range(len(qids)):
-                mask = vec_ids != qids[qi]
-                sc, ids = scores[qi][mask], vec_ids[mask]
-                # keep the RERANK depth per batch, not TOP_K: the exact
-                # re-rank stage needs the full shortlist to recover from
-                # quantization error (emitting only top-k here silently
-                # degrades it to pure ADC)
-                keep = min(_PQ_RERANK, len(sc))
-                if keep == 0:
-                    continue
-                part = np.argpartition(-sc, keep - 1)[:keep]
-                out["query_id"].extend([int(qids[qi])] * keep)
-                out["neighbor_id"].extend(int(i) for i in ids[part])
-                out["cosine_sim"].extend(float(s) for s in sc[part])
-            yield pd.DataFrame(out)
+def _keep_shortlist(out: dict, qid: int, scores, ids) -> None:
+    """Append query ``qid``'s batch-local top-_PQ_RERANK ADC scores (self
+    excluded) to ``out``. The RERANK depth, not TOP_K: the exact re-rank
+    needs the full shortlist to recover from quantization error (emitting
+    only top-k here silently degrades it to pure ADC)."""
+    import numpy as np
 
-    scored = codes_df.mapInPandas(
-        adc_score, schema="query_id long, neighbor_id long, cosine_sim double"
-    )
-    # ADC shortlist -> EXACT re-rank (the standard PQ pipeline: the
-    # compressed scan nominates _PQ_RERANK candidates per query, then the
-    # true vectors — candidate-sized, not corpus-sized — break the
-    # quantization ties). Both joins are broadcast (shortlist and query
-    # set are model-sized).
+    mask = ids != qid
+    sc, ids = scores[mask], ids[mask]
+    keep = min(_PQ_RERANK, len(sc))
+    if keep == 0:
+        return
+    part = np.argpartition(-sc, keep - 1)[:keep]
+    out["query_id"].extend([qid] * keep)
+    out["neighbor_id"].extend(int(i) for i in ids[part])
+    out["cosine_sim"].extend(float(s) for s in sc[part])
+
+
+def _rerank(spark: SparkSession, emb: DataFrame, scored: DataFrame, queries) -> DataFrame:
+    """ADC shortlist -> EXACT re-rank -> top-k (the standard PQ pipeline:
+    the compressed scan nominates _PQ_RERANK candidates per query, then the
+    true unit vectors — candidate-sized, not corpus-sized — break the
+    quantization ties). The shortlist is the GLOBAL ADC top-RERANK, total-
+    ordered on (score, id), so it does not depend on how the code table is
+    partitioned. Both joins are broadcast (shortlist and query set are
+    model-sized)."""
     w_adc = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
@@ -883,327 +829,173 @@ def _pq_adc_rerank(spark, emb, books, codes_df, queries, out_schema):
         [(int(qid), [float(x) for x in vec]) for qid, vec in queries],
         "query_id long, qe array<double>",
     )
-    rescored = (
+    return _top_k(
         emb.join(F.broadcast(shortlist), emb.vec_id == F.col("neighbor_id"))
         .join(F.broadcast(qdf), "query_id")
         .select(
             "query_id",
             "neighbor_id",
-            _dot(F.col("e"), F.col("qe")).alias("cos"),  # normalized -> dot = cosine
-        )
-    )
-    # rank on the ROUNDED score (ADVICE r13): the displayed 6-dp rounding
-    # must also decide rank, or two docs whose cosines differ by only
-    # summation-order/libm ulps at the k-boundary could order differently
-    # across engines (Spark vs DuckDB oracle vs the GEMM twin).
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 6)), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
+            _dot(F.col("u"), F.col("qe")).alias("cos"),  # unit vectors: dot = cosine
         )
     )
 
 
-def build_pq_index(spark: SparkSession, sf_dir: str) -> str | None:
-    """One-time PQ index build: train the per-subspace codebooks, encode the
-    corpus, and WRITE both as parquet — ``<base>/codebooks`` (m×k rows of
-    (s, c, centroid), a few MB at any scale) and ``<base>/codes`` (8 B/vector
-    code table). At 100 TB this is the batch index job; the code table and
-    codebooks are durable artifacts surviving the session, and queries are
-    probe-only reads (cf. ``build_ivf_index`` — same lifecycle, this is the
-    compressed twin). Memoized per (applicationId, sf_dir). Returns None
-    on an empty corpus."""
-    import tempfile
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "pq-stored-path")
-    if memo_key in _PQ_MEMO:
-        return _PQ_MEMO[memo_key]
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("nrm", _l2norm(F.col("e")))
-        .where(F.col("nrm") > 0)
-        .select("vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("e"))
-    )
-    sample_rows = emb.where(F.col("vec_id") < _PQ_SAMPLE).collect()  # model-sized
-    if len(sample_rows) < 2:
+def _pq_build(spark: SparkSession, emb: DataFrame):
+    """PQ index build: seeded per-subspace k-means on the model-sized
+    sample (driver numpy — PQ training is sample-based by design), then one
+    ``mapInPandas`` encode pass over the corpus. Returns (books, codes
+    (vec_id, code), sample); None when the sample has < 2 vectors."""
+    sample = _pq_sample(emb)
+    if len(sample) < 2:
         return None
-    books = _pq_train_codebooks([r["e"] for r in sample_rows])
-    base = tempfile.mkdtemp(prefix="pq_index_")
-    spark.createDataFrame(
-        [
-            (s, c, [float(x) for x in books[s][c]])
-            for s in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "s int, c int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{base}/codebooks")
-    (
-        spread(spark, emb)
-        .mapInPandas(_pq_encode_iter(books), schema="vec_id long, code array<long>")
-        .write.mode("overwrite")
-        .parquet(f"{base}/codes")
+    books = _pq_train_codebooks([r["u"] for r in sample])
+    codes = spread(spark, emb.select("vec_id", "u")).mapInPandas(
+        _pq_encode_iter(books), schema="vec_id long, code array<long>"
     )
-    _PQ_MEMO[memo_key] = base
-    return base
+    return books, codes, sample
+
+
+def _pq_probe(spark: SparkSession, emb: DataFrame, books, codes_df: DataFrame, queries) -> DataFrame:
+    """PQ probe: ADC scan over the code table emitting per-batch partial
+    top-RERANK (the shuffle carries batches×Q×RERANK rows, same trick as
+    the GEMM variant), then the shared exact re-rank."""
+    import numpy as np
+
+    if not queries:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    adc = _adc_tables(books, queries)
+    qids = [qid for qid, _ in queries]
+
+    def adc_score(batches):
+        import pandas as pd  # noqa: F811 — executor-side import
+
+        for pdf in batches:
+            codes = np.stack(pdf["code"].to_numpy())  # (n, m)
+            vec_ids = pdf["vec_id"].to_numpy()
+            # scores[q, n] = sum_s adc[q, s, codes[n, s]]
+            scores = np.take_along_axis(
+                adc[:, None, :, :], codes[None, :, :, None], axis=3
+            )[..., 0].sum(-1)
+            out = {"query_id": [], "neighbor_id": [], "cosine_sim": []}
+            for qi, qid in enumerate(qids):
+                _keep_shortlist(out, qid, scores[qi], vec_ids)
+            yield pd.DataFrame(out)
+
+    scored = codes_df.mapInPandas(
+        adc_score, schema="query_id long, neighbor_id long, cosine_sim double"
+    )
+    return _rerank(spark, emb, scored, queries)
+
+
+@REG.register("knn_cosine_pq")  # rows-only: approximate (seeded, deterministic)
+def knn_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN: top-k cosine via asymmetric distance
+    computation (ADC) over 8-byte codes.
+
+    This is the 100 TB *memory* story the IVF/LSH variants don't cover: a
+    64-dim float64 vector is 512 B; its PQ code is 8 B (one byte per
+    8-dim subspace, k=256 centroids) — 64× compression, so a 100 TB
+    embedding table scans as ~1.6 TB of codes. Cosine over normalized vectors decomposes
+    per subspace, so ADC scores are sums of m=8 table lookups: each query
+    precomputes an (8×16) inner-product table against the codebooks (tiny,
+    broadcast in the closure), and candidates never decompress.
+
+    Sample collect, codebook training and corpus encode all run FRESH per
+    call (round 15, VERDICT r14 #1); results are seeded and identical
+    across calls. The code table is checkpointed for the ADC scan.
+    Recall@5 vs ``knn_cosine_exact`` is measured and pinned in
+    tests/test_search.py::test_ann_recall_pq.
+    """
+    emb = _embeddings(spark, sf_dir)
+    built = _pq_build(spark, emb)
+    if built is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    books, codes, sample = built
+    codes = codes.localCheckpoint(eager=True)
+    return _pq_probe(
+        spark, emb, books, _probe_grain(codes, codes.count()), _pq_queries(emb, N_QUERIES, sample)
+    )
+
+
+def build_pq_index(spark: SparkSession, sf_dir: str) -> tuple | None:
+    """Stored PQ index: the `_pq_build` output WRITTEN as parquet —
+    ``<base>/codebooks`` (m×k rows) and ``<base>/codes`` (8 B/vector code
+    table). At 100 TB this is the batch index job; the artifacts survive
+    the session and queries are probe-only reads. Once per (app, sf_dir).
+    Returns (base, codebooks read back from disk); None on an empty
+    corpus."""
+
+    def build():
+        built = _pq_build(spark, _embeddings(spark, sf_dir))
+        if built is None:
+            return None
+        books, codes, _ = built
+        base = tempfile.mkdtemp(prefix="pq_index_")
+        _write_codebooks(spark, books, f"{base}/codebooks")
+        codes.write.mode("overwrite").parquet(f"{base}/codes")
+        return base, _read_codebooks(spark, f"{base}/codebooks")
+
+    return _stored_index(spark, ("pq", sf_dir), build)
 
 
 @REG.register("knn_cosine_pq_stored")  # rows-only: approximate (seeded, deterministic)
 def knn_cosine_pq_stored(
     spark: SparkSession, sf_dir: str, *, n_queries: int = N_QUERIES
 ) -> DataFrame:
-    """PQ ANN against the STORED parquet index: codebooks and the 8-byte
-    code table are read back from disk (no retraining, no re-encode), then
-    the shared `_pq_adc_rerank` probe runs — so results must reproduce
-    `knn_cosine_pq` exactly (asserted in tests/test_search.py). This is the
-    durable-artifact shape of the PQ story at 100 TB: the index outlives
-    the session; a query session reads ~1.6 TB of codes instead of 100 TB
-    of vectors, plus a few MB of codebooks.
-
-    Round 6: the LOADED driver-side artifacts (codebook array, query
-    sample) are cached per (session, index path), so repeated probes skip
-    the codebook parquet re-read + rebuild — only the code-table scan
-    (the by-design artifact read) repeats. Amortization at n_queries
-    10/100/400 is measured in COVERAGE.md next to the memoized twin's."""
-    import numpy as np
-
-    out_schema = "query_id long, neighbor_id long, cosine_sim double, rank int"
-    base = build_pq_index(spark, sf_dir)
-    if base is None:
-        return spark.createDataFrame([], out_schema)
-    app = spark.sparkContext.applicationId
-    art_key = (app, base, "pq-stored-art")
-    if art_key in _PQ_MEMO:
-        books = _PQ_MEMO[art_key]
-    else:
-        book_rows = spark.read.parquet(f"{base}/codebooks").collect()  # m×k rows
-        m = max(r["s"] for r in book_rows) + 1
-        k = max(r["c"] for r in book_rows) + 1
-        d_s = len(book_rows[0]["centroid"])
-        books = np.empty((m, k, d_s))
-        for r in book_rows:
-            books[r["s"], r["c"]] = r["centroid"]
-        _PQ_MEMO[art_key] = books
-    codes_df = spark.read.parquet(f"{base}/codes")
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("nrm", _l2norm(F.col("e")))
-        .where(F.col("nrm") > 0)
-        .select("vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("e"))
+    """PQ ANN against the STORED parquet index: the code table is read
+    back from disk (no retraining, no re-encode), then the same
+    `_pq_probe` runs — so results reproduce `knn_cosine_pq` exactly
+    (asserted in tests/test_search.py). A query session reads ~1.6 TB of
+    codes instead of 100 TB of vectors; the codebooks load once with the
+    index. Amortization over n_queries is measured in COVERAGE.md."""
+    built = build_pq_index(spark, sf_dir)
+    if built is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    base, books = built
+    emb = _embeddings(spark, sf_dir)
+    return _pq_probe(
+        spark, emb, books, spark.read.parquet(f"{base}/codes"), _pq_queries(emb, n_queries)
     )
-    if n_queries > _PQ_SAMPLE:
-        # the memoized sample covers vec_id < _PQ_SAMPLE only — honor a
-        # larger query set with a fresh collect rather than silently
-        # truncating it to the cached bound (round-7 ADVICE fix)
-        sample_rows = emb.where(F.col("vec_id") < n_queries).collect()
-    else:
-        sample_rows = _pq_sample_rows(spark, sf_dir, emb)
-    queries = [
-        (int(r["vec_id"]), np.asarray(r["e"], dtype=np.float64))
-        for r in sample_rows
-        if r["vec_id"] < n_queries
-    ]
-    if not queries:
-        return spark.createDataFrame([], out_schema)
-    return _pq_adc_rerank(spark, emb, books, codes_df, queries, out_schema)
 
 
-@REG.register("knn_cosine_ivfpq")  # rows-only: approximate (seeded, deterministic)
-def knn_cosine_ivfpq(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    n_clusters: int = 16,
-    nprobe: int = 8,
-    n_queries: int = N_QUERIES,
-    _shared: dict | None = None,
-) -> DataFrame:
-    """IVF+PQ combined — the FAISS-style architecture an actual 100 TB
-    vector store runs: a coarse KMeans quantizer prunes the search to
-    ``nprobe`` of ``n_clusters`` partitions (I/O: read 1/2 of the index
-    at the defaults), the probed partitions scan 8-byte PQ codes instead
-    of 512-byte vectors (memory/bandwidth: 64× less), ADC nominates a
-    shortlist, and an exact re-rank of the candidate-sized shortlist
-    restores ranking quality.
-
-    Composition of the two indexed paths already in this module:
-    ``knn_cosine_ivf``'s coarse assignment + ``knn_cosine_pq``'s
-    codebooks/ADC/re-rank. Recall@5 vs exact is measured and pinned in
-    tests/test_search.py::test_ann_recall_ivfpq."""
-    import numpy as np
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    out_schema = "query_id long, neighbor_id long, cosine_sim double, rank int"
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("nrm", _l2norm(F.col("e")))
-        .where(F.col("nrm") > 0)
-        .select("vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("e"))
-    )
-    # Round 15 (VERDICT r14 #1): codebook training, the coarse fit and
-    # the corpus encode all run FRESH per call — train + encode + probe
-    # is this live key's declared computation; the r14 per-application
-    # index memo made measured bench runs probe-only. The stored-parquet
-    # lifecycle lives in `knn_cosine_ivfpq_stored`.
-    #
-    # ONE corpus pass per call: the normalized+vectorized frame is
-    # materialized before the iterative fit (guide §5 caching rule —
-    # KMeans' ~20 iteration jobs otherwise re-evaluate the whole
-    # normalization lineage per job; measured 14.7 -> 3.1 s at local[32]
-    # with identical centers). The n_seen probe, the PQ sample and the
-    # encode pass all read this checkpoint too, so the normalization is
-    # evaluated exactly once. The rerank join keeps the parquet-based
-    # `emb` (returned-plan shape unchanged).
-    vecs = (
-        emb.select(
-            "vec_id",
-            "e",
-            F.when(F.col("e").isNotNull(), array_to_vector(F.col("e"))).alias(
-                "features"
-            ),
-        )
-        .where(F.col("features").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    n_seen = vecs.limit(n_clusters + 1).count()
-    if n_seen < 2:
-        return spark.createDataFrame([], out_schema)
-
-    # --- PQ codebooks on a model-sized sample ---
-    # `_shared` is ann_recall_eval's PER-CALL scratchpad: the pq and
-    # ivfpq methods it evaluates train codebooks from the identical
-    # (seeded, deterministic) sample, so one collect+train inside a
-    # single evaluation call serves both. Registered standalone calls
-    # pass nothing and recompute everything.
-    sample_rows = _shared.get("sample_rows") if _shared else None
-    if sample_rows is None:
-        sample_rows = (
-            vecs.where(F.col("vec_id") < _PQ_SAMPLE).select("vec_id", "e").collect()
-        )
-        if _shared is not None:
-            _shared["sample_rows"] = sample_rows
-    if len(sample_rows) < 2:
-        return spark.createDataFrame([], out_schema)
-    # codebook TRAINING stays bounded at the model-sized _PQ_SAMPLE; the
-    # QUERY set honors n_queries even past that bound (round-7 fix — the
-    # training sample doubling as the query pool silently truncated it)
-    query_rows = (
-        sample_rows
-        if n_queries <= _PQ_SAMPLE
-        else emb.where(F.col("vec_id") < n_queries).collect()
-    )
-    books = _shared.get("books") if _shared else None
+def _ivfpq_build(spark: SparkSession, emb: DataFrame, n_clusters: int, books=None):
+    """IVF+PQ index build: coarse KMeans assignment of the unit vectors
+    (materialized once, see `_coarse_fit`; the sample and the encode read
+    the same checkpoint), then the PQ encode tagging each code with its
+    cluster. Codebooks are trained on the sample unless ``books`` is given.
+    Returns (books, centroids, codes (vec_id, cluster, code), sample);
+    None when the sample has < 2 vectors."""
+    vecs = _features(emb.select("vec_id", "u"), "u").localCheckpoint(eager=True)
+    sample = _pq_sample(vecs)
+    if len(sample) < 2:
+        return None
+    points = [r["u"] for r in sample]
     if books is None:
-        books = _pq_train_codebooks([r["e"] for r in sample_rows])
-        if _shared is not None:
-            _shared["books"] = books
-
-    # --- coarse quantizer (IVF stage) ---
-    # unlike the raw-vector IVF, the fit input here is NORMALIZED, so a
-    # tiny corpus can collapse to fewer DISTINCT points than k and crash
-    # KMeans init — cap k by the sample's distinct count, and skip KMeans
-    # entirely (everything is one cluster) when that count is < 2, since
-    # Spark's KMeans rejects k=1
-    n_distinct = len({tuple(r["e"]) for r in sample_rows})
-    if n_distinct < 2:
-        assigned = vecs.select("vec_id", "e", F.lit(0).alias("cluster"))
-        centroids = np.asarray([sample_rows[0]["e"]], dtype=np.float64)
-    else:
-        km = KMeans(
-            k=min(n_clusters, n_seen, n_distinct),
-            seed=42,
-            maxIter=20,
-            featuresCol="features",
-        )
-        model = km.fit(vecs)
-        assigned = model.transform(vecs).select(
-            "vec_id", "e", F.col("prediction").alias("cluster")
-        )
-        centroids = np.array(model.clusterCenters())
-    # the assigned+encoded code table IS the index for this call: cut
-    # lineage so the probe below scans a materialized frame (the
-    # stored-parquet shape at scale — cf. knn_cosine_ivf_stored)
-    pq_codes = _shared.get("pq_codes") if _shared else None
-    if pq_codes is not None and "books" in _shared:
-        # evaluation-call reuse: the per-vector code column is a pure
-        # function of (books, vector), so with the SAME shared books the
-        # pq method's code table is bit-identical to what the encode
-        # below would produce — attach this call's cluster ids by id
-        # join instead of re-running the Python encode. The shortlist
-        # window is total-ordered, so code-table partitioning cannot
-        # affect results.
-        codes_df = (
-            pq_codes.join(
-                F.broadcast(assigned.select("vec_id", "cluster")), "vec_id"
-            )
-            .select("vec_id", "cluster", "code")
-            .localCheckpoint(eager=True)
-        )
-    else:
-        codes_df = (
-            spread(spark, assigned)
-            .mapInPandas(
-                _pq_encode_iter(books, extra_cols=("cluster",)),
-                schema="vec_id long, cluster int, code array<long>",
-            )
-            .localCheckpoint(eager=True)
-        )
-    # _probe_grain deliberately NOT applied here (measured 2.3-3.9 s at
-    # 32 partitions vs 5.4-6.2 coalesced, same session alternating): the
-    # IVFPQ ADC closure gathers a per-row (n, m, k) score table, so its
-    # probe is memory-bandwidth-bound and wants the parallelism the
-    # PQ closure (broadcast-indexed, no gather) does not need.
-    return _ivfpq_probe(
-        spark, emb, books, centroids, codes_df, query_rows, nprobe, out_schema,
-        n_queries=n_queries,
+        books = _pq_train_codebooks(points)
+    assigned, centroids = _coarse_fit(vecs, n_clusters, sample=points)
+    codes = spread(spark, assigned.select("vec_id", "u", "cluster")).mapInPandas(
+        _pq_encode_iter(books, extra_cols=("cluster",)),
+        schema="vec_id long, cluster int, code array<long>",
     )
+    return books, centroids, codes, sample
 
 
 def _ivfpq_probe(
-    spark, emb, books, centroids, codes_df, sample_rows, nprobe, out_schema,
-    n_queries=N_QUERIES,
-):
-    """Query side of the IVF+PQ index: probe selection, ADC over probed
-    codes, exact re-rank. Split out so the built index memoizes."""
+    spark: SparkSession, emb: DataFrame, books, centroids, codes_df: DataFrame, queries, nprobe: int
+) -> DataFrame:
+    """IVF+PQ probe: per-query probe set (nearest ``nprobe`` centroids,
+    driver-side — the centroid table is model-sized), ADC over the probed
+    codes, shared exact re-rank."""
     import numpy as np
 
-    d_s = books.shape[2]
-    queries = [
-        (int(r["vec_id"]), np.asarray(r["e"], dtype=np.float64))
-        for r in sample_rows
-        if r["vec_id"] < n_queries
-    ]
     if not queries:
-        return spark.createDataFrame([], out_schema)
-    # per-query probe set: nearest nprobe centroids (driver-side — the
-    # centroid table is model-sized)
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     cluster_to_qrows: dict[int, list[int]] = {}
     for i, (_qid, qv) in enumerate(queries):
-        order = np.argsort(-(centroids @ qv))
-        for c in order[:nprobe]:
+        for c in np.argsort(-(centroids @ qv))[:nprobe]:
             cluster_to_qrows.setdefault(int(c), []).append(i)
-
-    adc = np.stack(
-        [
-            np.stack([books[s] @ q[s * d_s : (s + 1) * d_s] for s in range(_PQ_M)])
-            for _, q in queries
-        ]
-    )
-    qids = np.array([qid for qid, _ in queries])
+    adc = _adc_tables(books, queries)
+    qids = [qid for qid, _ in queries]
 
     def adc_score(batches):
         import pandas as pd  # noqa: F811 — executor-side import
@@ -1224,167 +1016,96 @@ def _ivfpq_probe(
                 # score this cluster's codes against every query probing
                 # it in one gather: tbl (nq, m, k) indexed by ccodes ->
                 # (nq, n_c, m), summed over subspaces -> (nq, n_c)
-                tbl = adc[qrows]
                 gathered = np.take_along_axis(
-                    tbl[:, None, :, :], ccodes[None, :, :, None], axis=3
+                    adc[qrows][:, None, :, :], ccodes[None, :, :, None], axis=3
                 )[..., 0]
                 scores = gathered.sum(-1)
                 for ii, qi in enumerate(qrows):
-                    qid = int(qids[qi])
-                    mask = cids != qid
-                    sc, ids = scores[ii][mask], cids[mask]
-                    keep = min(_PQ_RERANK, len(sc))
-                    if keep == 0:
-                        continue
-                    part = np.argpartition(-sc, keep - 1)[:keep]
-                    out["query_id"].extend([qid] * keep)
-                    out["neighbor_id"].extend(int(i) for i in ids[part])
-                    out["cosine_sim"].extend(float(s) for s in sc[part])
+                    _keep_shortlist(out, qids[qi], scores[ii], cids)
             yield pd.DataFrame(out)
 
     # IVF pruning as a pushable predicate: only probed clusters are
     # scanned (directory-level partition pruning on the stored code
     # table, a cheap filter on the in-memory one). The per-(query,
-    # cluster) pairing then happens INSIDE the closure (r14: replaces
-    # the former broadcast probe join, which expanded every code row
-    # once per probing query — ~16x the Arrow traffic at the defaults —
-    # before an identical gather; results are bit-equal because the
-    # same (query, code) pairs are scored with the same table lookups
-    # and the shortlist window's (score, neighbor_id) order is total).
-    # Trade documented (ADVICE r14): the closure emits up to _PQ_RERANK
-    # rows per (query, CLUSTER, batch) — up to nprobe× more shortlist
-    # exchange rows than the r13 per-(query, batch) cut. Model-sized
-    # either way (nprobe × RERANK × |queries| rows max) and the window
-    # prunes to _PQ_RERANK; an in-closure per-query merge across
-    # clusters would re-add per-batch state for rows that cost less to
-    # ship than to merge at this fan-in.
+    # cluster) pairing happens INSIDE the closure (r14: a broadcast probe
+    # join expanded every code row once per probing query, ~16x the Arrow
+    # traffic). Trade (ADVICE r14): the closure emits up to _PQ_RERANK rows
+    # per (query, CLUSTER, batch) — model-sized (nprobe × RERANK ×
+    # |queries| rows max), and cheaper to ship than to merge in-closure.
     probed = codes_df.where(F.col("cluster").isin(sorted(cluster_to_qrows)))
     scored = probed.mapInPandas(
         adc_score, schema="query_id long, neighbor_id long, cosine_sim double"
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("rnk", F.row_number().over(w_adc))
-        .where(F.col("rnk") <= _PQ_RERANK)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = spark.createDataFrame(
-        [(int(qid), [float(x) for x in vec]) for qid, vec in queries],
-        "query_id long, qe array<double>",
-    )
-    rescored = (
-        emb.join(F.broadcast(shortlist), emb.vec_id == F.col("neighbor_id"))
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _dot(F.col("e"), F.col("qe")).alias("cos"),
-        )
-    )
-    # rank on the ROUNDED score (ADVICE r13): the displayed 6-dp rounding
-    # must also decide rank, or two docs whose cosines differ by only
-    # summation-order/libm ulps at the k-boundary could order differently
-    # across engines (Spark vs DuckDB oracle vs the GEMM twin).
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cos", 6)), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
+    return _rerank(spark, emb, scored, queries)
+
+
+@REG.register("knn_cosine_ivfpq")  # rows-only: approximate (seeded, deterministic)
+def knn_cosine_ivfpq(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    n_clusters: int = _IVFPQ_CLUSTERS,
+    nprobe: int = _IVFPQ_NPROBE,
+    n_queries: int = N_QUERIES,
+) -> DataFrame:
+    """IVF+PQ combined — the FAISS-style architecture an actual 100 TB
+    vector store runs: a coarse KMeans quantizer prunes the search to
+    ``nprobe`` of ``n_clusters`` partitions (I/O: read 1/2 of the index
+    at the defaults), the probed partitions scan 8-byte PQ codes instead
+    of 512-byte vectors (memory/bandwidth: 64× less), ADC nominates a
+    shortlist, and an exact re-rank of the candidate-sized shortlist
+    restores ranking quality.
+
+    Codebook training, the coarse fit and the corpus encode all run FRESH
+    per call (round 15, VERDICT r14 #1); the code table is checkpointed
+    for the probe. Recall@5 vs exact is measured and pinned in
+    tests/test_search.py::test_ann_recall_ivfpq."""
+    emb = _embeddings(spark, sf_dir)
+    built = _ivfpq_build(spark, emb, n_clusters)
+    if built is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    books, centroids, codes, sample = built
+    # _probe_grain deliberately NOT applied here (measured 2.3-3.9 s at
+    # 32 partitions vs 5.4-6.2 coalesced, same session alternating): the
+    # IVFPQ ADC closure gathers a per-row (n, m, k) score table, so its
+    # probe is memory-bandwidth-bound and wants the parallelism the
+    # PQ closure (broadcast-indexed, no gather) does not need.
+    return _ivfpq_probe(
+        spark, emb, books, centroids, codes.localCheckpoint(eager=True),
+        _pq_queries(emb, n_queries, sample), nprobe,
     )
 
 
 def build_ivfpq_index(
-    spark: SparkSession, sf_dir: str, *, n_clusters: int = 16
-) -> str | None:
-    """One-time IVF+PQ index build, written to parquet: ``<base>/centroids``
-    (coarse quantizer), ``<base>/codebooks`` (PQ per-subspace centroids),
-    and ``<base>/codes`` — the 8-byte code table PARTITIONED BY cluster, so
-    a probe reads only nprobe/n_clusters of the index at the directory
-    level. This is the full FAISS-style durable artifact at 100 TB: the
-    batch index job runs once; query sessions read a few MB of
+    spark: SparkSession, sf_dir: str, *, n_clusters: int = _IVFPQ_CLUSTERS
+) -> tuple | None:
+    """Stored IVF+PQ index: the `_ivfpq_build` output WRITTEN as parquet —
+    ``<base>/centroids`` (coarse quantizer), ``<base>/codebooks`` and
+    ``<base>/codes``, the 8-byte code table PARTITIONED BY cluster, so a
+    probe reads only nprobe/n_clusters of the index at the directory
+    level. The full FAISS-style durable artifact: the batch index job runs
+    once per (app, sf_dir, n_clusters); query sessions read a few MB of
     centroids/codebooks plus the probed partitions of a ~64×-compressed
-    code table. Memoized per (sf_dir, n_clusters). None on empty corpus."""
-    import tempfile
-
+    code table. Returns (base, centroids, codebooks), the arrays read back
+    from disk; None on an empty corpus."""
     import numpy as np
 
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    def build():
+        built = _ivfpq_build(spark, _embeddings(spark, sf_dir), n_clusters)
+        if built is None:
+            return None
+        books, centroids, codes, _ = built
+        base = tempfile.mkdtemp(prefix="ivfpq_index_")
+        _centroid_frame(spark, centroids).write.mode("overwrite").parquet(f"{base}/centroids")
+        _write_codebooks(spark, books, f"{base}/codebooks")
+        codes.write.mode("overwrite").partitionBy("cluster").parquet(f"{base}/codes")
+        rows = spark.read.parquet(f"{base}/centroids").collect()
+        centroids = np.empty((len(rows), len(rows[0]["centroid"])))
+        for r in rows:
+            centroids[r["cluster"]] = r["centroid"]
+        return base, centroids, _read_codebooks(spark, f"{base}/codebooks")
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "ivfpq-stored-path", n_clusters)
-    if memo_key in _PQ_MEMO:
-        return _PQ_MEMO[memo_key]
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("nrm", _l2norm(F.col("e")))
-        .where(F.col("nrm") > 0)
-        .select("vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("e"))
-    )
-    sample_rows = emb.where(F.col("vec_id") < _PQ_SAMPLE).collect()
-    if len(sample_rows) < 2:
-        return None
-    books = _pq_train_codebooks([r["e"] for r in sample_rows])
-    vecs = emb.select(
-        "vec_id",
-        "e",
-        F.when(F.col("e").isNotNull(), array_to_vector(F.col("e"))).alias("features"),
-    ).where(F.col("features").isNotNull())
-    # materialize once before the iterative fit (guide §5; round 15 —
-    # see knn_cosine_ivfpq): lineage-only, identical centers; the encode
-    # + index write re-read the checkpoint instead of the normalization
-    vecs = vecs.localCheckpoint(eager=True)
-    n_distinct = len({tuple(r["e"]) for r in sample_rows})
-    if n_distinct < 2:
-        assigned = vecs.select("vec_id", "e", F.lit(0).alias("cluster"))
-        centroids = np.asarray([sample_rows[0]["e"]], dtype=np.float64)
-    else:
-        km = KMeans(
-            k=min(n_clusters, len(sample_rows), n_distinct),
-            seed=42,
-            maxIter=20,
-            featuresCol="features",
-        )
-        model = km.fit(vecs)
-        assigned = model.transform(vecs).select(
-            "vec_id", "e", F.col("prediction").alias("cluster")
-        )
-        centroids = np.array(model.clusterCenters())
-    base = tempfile.mkdtemp(prefix="ivfpq_index_")
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cluster int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{base}/centroids")
-    spark.createDataFrame(
-        [
-            (s, c, [float(x) for x in books[s][c]])
-            for s in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "s int, c int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{base}/codebooks")
-    (
-        spread(spark, assigned)
-        .mapInPandas(
-            _pq_encode_iter(books, extra_cols=("cluster",)),
-            schema="vec_id long, cluster int, code array<long>",
-        )
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(f"{base}/codes")
-    )
-    _PQ_MEMO[memo_key] = base
-    return base
+    return _stored_index(spark, ("ivfpq", sf_dir, n_clusters), build)
 
 
 @REG.register("knn_cosine_ivfpq_stored")  # rows-only: approximate (seeded, deterministic)
@@ -1392,150 +1113,25 @@ def knn_cosine_ivfpq_stored(
     spark: SparkSession,
     sf_dir: str,
     *,
-    n_clusters: int = 16,
-    nprobe: int = 8,
+    n_clusters: int = _IVFPQ_CLUSTERS,
+    nprobe: int = _IVFPQ_NPROBE,
     n_queries: int = N_QUERIES,
 ) -> DataFrame:
-    """IVF+PQ against the STORED parquet index: centroids, codebooks and
-    the cluster-partitioned code table are read back from disk; the union
-    of the queries' probe clusters becomes a partition filter on the code
-    table (directory-level pruning, asserted in tests/test_search.py like
-    the stored-IVF twin), then the shared `_ivfpq_probe` runs — so results
-    must reproduce `knn_cosine_ivfpq` exactly (same seeds, same KMeans
-    input, same probe plan; equality-asserted). Completes the durable
-    index story: both ANN families (IVF, PQ) and their composition now
-    have a stored-artifact twin that survives the session."""
-    import numpy as np
-
-    out_schema = "query_id long, neighbor_id long, cosine_sim double, rank int"
-    base = build_ivfpq_index(spark, sf_dir, n_clusters=n_clusters)
-    if base is None:
-        return spark.createDataFrame([], out_schema)
-    app = spark.sparkContext.applicationId
-    art_key = (app, base, "ivfpq-stored-art")
-    if art_key in _PQ_MEMO:
-        centroids, books = _PQ_MEMO[art_key]
-    else:
-        cent_rows = spark.read.parquet(f"{base}/centroids").collect()
-        centroids = np.empty((len(cent_rows), len(cent_rows[0]["centroid"])))
-        for r in cent_rows:
-            centroids[r["cluster"]] = r["centroid"]
-        book_rows = spark.read.parquet(f"{base}/codebooks").collect()
-        m = max(r["s"] for r in book_rows) + 1
-        k = max(r["c"] for r in book_rows) + 1
-        d_s = len(book_rows[0]["centroid"])
-        books = np.empty((m, k, d_s))
-        for r in book_rows:
-            books[r["s"], r["c"]] = r["centroid"]
-        _PQ_MEMO[art_key] = (centroids, books)
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-        .withColumn("nrm", _l2norm(F.col("e")))
-        .where(F.col("nrm") > 0)
-        .select("vec_id", F.transform("e", lambda x: x / F.col("nrm")).alias("e"))
-    )
-    sample_key = (app, sf_dir, "pq-stored-sample")
-    if n_queries > _PQ_SAMPLE:
-        # memoized sample is bounded at _PQ_SAMPLE — honor a larger query
-        # set with a fresh collect, never silently truncate (round-7 fix)
-        sample_rows = emb.where(F.col("vec_id") < n_queries).collect()
-    elif sample_key in _PQ_MEMO:
-        sample_rows = _PQ_MEMO[sample_key]
-    else:
-        sample_rows = emb.where(F.col("vec_id") < _PQ_SAMPLE).collect()
-        _PQ_MEMO[sample_key] = sample_rows
-    queries = [
-        np.asarray(r["e"], dtype=np.float64)
-        for r in sample_rows
-        if r["vec_id"] < n_queries
-    ]
-    if not queries:
-        return spark.createDataFrame([], out_schema)
-    # union of probe clusters -> partition filter (directory pruning); the
-    # per-query probe assignment happens again inside _ivfpq_probe with the
-    # identical centroid ranking
-    probed = sorted(
-        {
-            int(c)
-            for qv in queries
-            for c in np.argsort(-(centroids @ qv))[:nprobe]
-        }
-    )
-    codes_df = spark.read.parquet(f"{base}/codes").where(
-        F.col("cluster").isin(probed)
-    )
+    """IVF+PQ against the STORED parquet index: centroids and codebooks
+    come loaded with the index; the union of the queries' probe clusters
+    becomes a partition filter on the code table (directory-level pruning,
+    asserted in tests/test_search.py like the stored-IVF twin), then the
+    same `_ivfpq_probe` runs — so results reproduce `knn_cosine_ivfpq`
+    exactly (equality-asserted)."""
+    built = build_ivfpq_index(spark, sf_dir, n_clusters=n_clusters)
+    if built is None:
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    base, centroids, books = built
+    emb = _embeddings(spark, sf_dir)
     return _ivfpq_probe(
-        spark, emb, books, centroids, codes_df, sample_rows, nprobe, out_schema,
-        n_queries=n_queries,
+        spark, emb, books, centroids, spark.read.parquet(f"{base}/codes"),
+        _pq_queries(emb, n_queries), nprobe,
     )
-
-
-def build_lsh_index(
-    spark: SparkSession, sf_dir: str, *, num_hash_tables: int = 4
-) -> str | None:
-    """One-time LSH index build (round 5 — completes the stored-index
-    matrix: LSH, IVF, PQ, IVF+PQ all have durable parquet twins): fit the
-    seeded random-projection model once, hash every normalized vector,
-    and WRITE the bucket assignment as parquet partitioned by
-    (hash-table, bucket) plus the normalized vectors alongside — queries
-    then read only their own buckets at the directory level. The bucket
-    assignment is ID-ONLY (vec_id per (t, bucket)); the normalized
-    vectors live once in ``{base}/vectors`` — candidate generation then
-    shuffles 16-byte id pairs instead of pairs of embedding arrays, and
-    the index is ~(1 + tables·id/vec) of the corpus instead of ~tables×
-    (round 14; the old layout made the stored variant SLOWER than the
-    live join it exists to amortize). Memoized per (sf_dir, tables).
-    Returns None on an empty corpus."""
-    import tempfile
-
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "lsh-stored-path", num_hash_tables)
-    if memo_key in _PQ_MEMO:
-        return _PQ_MEMO[memo_key]
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("embedding").isNotNull())
-        .select("vec_id", _as_double("embedding").alias("e"))
-        .where(_l2norm(F.col("e")) > 0)
-    )
-    if emb.isEmpty():
-        return None
-    normed = emb.select(
-        "vec_id",
-        F.transform("e", lambda x: x / _l2norm(F.col("e"))).alias("ne"),
-    ).withColumn(
-        "features",
-        F.when(F.col("ne").isNotNull(), array_to_vector(F.col("ne"))),
-    ).where(F.col("features").isNotNull()).localCheckpoint(eager=True)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=0.5,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(normed)
-    hashed = model.transform(normed).select(
-        "vec_id",
-        F.posexplode("hashes").alias("t", "hv"),
-    ).select(
-        "vec_id",
-        "t",
-        vector_to_array("hv").getItem(0).cast("long").alias("bucket"),
-    )
-    base = tempfile.mkdtemp(prefix="lsh_index_")
-    hashed.write.mode("overwrite").partitionBy("t", "bucket").parquet(
-        f"{base}/buckets"
-    )
-    normed.select("vec_id", "ne").write.mode("overwrite").parquet(
-        f"{base}/vectors"
-    )
-    _PQ_MEMO[memo_key] = base
-    return base
 
 
 @REG.register("knn_cosine_lsh_stored")  # rows-only: approximate (seeded, deterministic)
@@ -1547,23 +1143,15 @@ def knn_cosine_lsh_stored(
     num_hash_tables: int = 4,
 ) -> DataFrame:
     """LSH neighbor pairs against the STORED bucket index: candidates are
-    pairs sharing any (hash-table, bucket) partition of the stored
-    assignment — the identical candidate rule `approxSimilarityJoin` uses
-    (same model seed, same bucket length) — then the exact euclidean
-    post-filter on the stored normalized vectors. Results must reproduce
-    `knn_cosine_lsh` (asserted in tests/test_search.py; cosine values are
-    equal to 6 decimals, the operator's output precision). At 100 TB the
-    bucket join is partition-pruned parquet reads, and the index build is
-    a once-per-corpus batch job like its IVF/PQ siblings. Candidate
-    generation self-joins the ID-ONLY bucket assignment and dedups the
-    id pairs BEFORE the vectors are attached (round 14): the pair-dedup
-    shuffle carries 16-byte rows, and the exact verify reads the stored
-    normalized vectors through two id joins on the already-distributed
-    pair set (AQE broadcasts the vector side while it is small)."""
+    pairs sharing any (hash-table, bucket) — `approxSimilarityJoin`'s rule
+    (same model seed and bucket length) — deduplicated as 16-byte id pairs
+    BEFORE the stored unit vectors are attached for the exact euclidean
+    post-filter. Results reproduce `knn_cosine_lsh` (asserted in
+    tests/test_search.py); at 100 TB the bucket join is partition-pruned
+    parquet reads."""
     base = build_lsh_index(spark, sf_dir, num_hash_tables=num_hash_tables)
-    out_schema = "id_a long, id_b long, cosine_sim double"
     if base is None:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], _PAIR_SCHEMA)
     idx = spark.read.parquet(f"{base}/buckets")
     vecs = spark.read.parquet(f"{base}/vectors")
     cand = (
@@ -1577,21 +1165,14 @@ def knn_cosine_lsh_stored(
         cand.join(vecs.select(F.col("vec_id").alias("id_a"), F.col("ne").alias("na")), "id_a")
         .join(vecs.select(F.col("vec_id").alias("id_b"), F.col("ne").alias("nb")), "id_b")
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("na"), F.col("nb"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    euclid = F.sqrt(d2)
-    return (
-        pairs.withColumn("euclid", euclid)
-        .where(F.col("euclid") <= F.lit(euclid_threshold))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(1 - F.col("euclid") * F.col("euclid") / 2, 6).alias("cosine_sim"),
+    euclid = F.sqrt(
+        F.aggregate(
+            F.zip_with(F.col("na"), F.col("nb"), lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
         )
     )
+    return _lsh_pairs(pairs.select("id_a", "id_b", euclid.alias("euclid")), euclid_threshold)
 
 
 _KM_K = 8
@@ -2020,6 +1601,8 @@ def kmeans_silhouette(
     )
 
 
+
+
 @REG.register("ann_recall_eval")  # rows-only: evaluates seeded approximate methods
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality report as a first-class operator: recall@TOP_K of every
@@ -2033,47 +1616,59 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: every method's result is a (query_id, neighbor_id) set of at
     most N_QUERIES×TOP_K rows — the joins and aggregates below run on
     KB-sized frames regardless of corpus scale; the real cost is the
-    methods' own index builds, which run FRESH inside every call exactly
-    as in their registered keys (round 15: no per-session memos).
-    Output: (method, macro_recall, min_recall, n_queries), macro = mean
-    per-query recall, min = worst query."""
-    # PER-CALL scratchpad: pq and ivfpq train codebooks from the
-    # identical deterministic sample, so one collect+train inside this
-    # evaluation call serves both (results identical — the sample and
-    # the seeded trainer are the same; this is intra-call reuse, shared
-    # by nothing outside this invocation).
-    shared: dict = {}
-    methods = [
-        ("gemm", knn_cosine_gemm),
-        ("ivf", knn_cosine_ivf),
-        ("pq", lambda s, d: knn_cosine_pq(s, d, _shared=shared)),
-        ("ivfpq", lambda s, d: knn_cosine_ivfpq(s, d, _shared=shared)),
-    ]
+    methods' own index builds, which run FRESH inside every call through
+    the same builders and probes as their registered keys (round 15: no
+    per-session memos). The PQ and IVF+PQ indexes share one build: the
+    codebooks are trained once, and the PQ code table is the IVF+PQ one
+    without its cluster column (a code is a pure function of (books,
+    vector)). Output: (method, macro_recall, min_recall, n_queries),
+    macro = mean per-query recall, min = worst query."""
     from ..ckpt import ckpt_tracked, drop_ckpt
 
     # the exact frame is referenced 8x in the returned plan (4 hits
     # joins + 4 per-query spines) and Spark has no cross-branch subplan
     # reuse for it — localCheckpoint pins ~N_QUERIES*TOP_K rows and cuts
     # 8 brute-force scans to 1 (measured 9.2 s -> see bench). Tracked
-    # (round-12 advice): all five intermediate checkpoints are released
+    # (round-12 advice): every intermediate checkpoint is released
     # below once the final 4-row report is itself materialized, so
     # repeated invocations in a long-lived session pin nothing.
     exact, exact_ids = ckpt_tracked(
         knn_cosine_exact(spark, sf_dir).select("query_id", "neighbor_id")
     )
+    dead_ids: set = set(exact_ids)
+    emb = _embeddings(spark, sf_dir)
+    # the sample comes from the parquet frame, as in knn_cosine_pq: its
+    # row order feeds the seeded codebook init
+    sample = _pq_sample(emb)
+    if len(sample) < 2:
+        pq = ivfpq = spark.createDataFrame([], _TOPK_SCHEMA)
+    else:
+        books = _pq_train_codebooks([r["u"] for r in sample])
+        _, centroids, codes, _ = _ivfpq_build(spark, emb, _IVFPQ_CLUSTERS, books=books)
+        codes, ids = ckpt_tracked(codes)
+        dead_ids |= ids
+        queries = _pq_queries(emb, N_QUERIES, sample)
+        pq_codes = codes.drop("cluster")
+        pq = _pq_probe(spark, emb, books, _probe_grain(pq_codes, pq_codes.count()), queries)
+        ivfpq = _ivfpq_probe(
+            spark, emb, books, centroids, codes, queries, _IVFPQ_NPROBE
+        )
+    methods = [
+        ("gemm", knn_cosine_gemm(spark, sf_dir)),
+        ("ivf", knn_cosine_ivf(spark, sf_dir)),
+        ("pq", pq),
+        ("ivfpq", ivfpq),
+    ]
     per_q_exact = exact.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_exact")
     )
     outs = []
-    dead_ids: set = set(exact_ids)
-    for name, fn in methods:
+    for name, result in methods:
         # each method frame is <= N_QUERIES*TOP_K rows but its plan is a
         # full index probe — checkpoint so the returned union executes
         # against 4 tiny pinned frames instead of re-probing every index
         approx, ids = ckpt_tracked(
-            fn(spark, sf_dir).select(
-                "query_id", "neighbor_id", F.lit(name).alias("method")
-            )
+            result.select("query_id", "neighbor_id", F.lit(name).alias("method"))
         )
         dead_ids |= ids
         hits = (

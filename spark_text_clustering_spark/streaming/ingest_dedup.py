@@ -53,7 +53,14 @@ def streaming_ingest_dedup(
     committed epochs are not reprocessed, and a replayed (crashed) epoch
     overwrites its own store partition idempotently. Returns the store's
     current survivor frame (doc ids + their batch partitions)."""
-    from ..operators.dedup import incremental_dedup, incremental_dedup_minhash
+    from ..operators.dedup import (
+        incremental_dedup,
+        incremental_dedup_minhash,
+        reject_unsigned_substore,
+    )
+
+    if minhash:  # before the stream starts: the final read would drop rows
+        reject_unsigned_substore(store_path)
 
     def _dedup_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         docs = batch_df.select("doc_id", "text")

@@ -8,6 +8,7 @@ import os
 import pytest
 
 from spark_text_clustering_spark.app import Params, run_scoring, run_training
+from spark_text_clustering_spark.ml.lda import load_newest_model
 from spark_text_clustering_spark.sources.text_corpus import read_stopwords, read_text_corpus
 
 BOOKS = {
@@ -70,6 +71,9 @@ def test_newest_model_wins(spark, corpus_dir, tmp_path_factory):
     first = run_training(spark, corpus_dir, model_dir, params)
     second = run_training(spark, corpus_dir, model_dir, params)
     assert sorted(os.listdir(model_dir))[-1] == os.path.basename(second["model_path"])
+    # one listing names both the LDA model and the vectorizer beside it
+    path, _ = load_newest_model(model_dir)
+    assert path == second["model_path"]
 
 
 def test_train_with_lemmatize_stage(spark, corpus_dir, tmp_path_factory):

@@ -59,7 +59,7 @@ def test_lazy_headline_key_launches_no_construction_jobs(spark, key):
 # the builder's isolated measurements (knn_cosine_ivfpq_stored 21.84 s vs
 # 2.16–2.48 s); one candidate cause was the measured (second) construction
 # re-entering the IVF/PQ k-means fits — i.e. a miss on the
-# similarity._PQ_MEMO keys. This test pins the memo contract with the same
+# similarity._STORED_INDEX_MEMO keys. This test pins the memo contract with the same
 # job-group instrument: after one full construction (the bench's warmup
 # pass), a SECOND construction of each stored key may launch only
 # read/probe-sized work. A KMeans re-fit alone launches ~20+ jobs
@@ -69,9 +69,10 @@ def test_lazy_headline_key_launches_no_construction_jobs(spark, key):
 # t_construct/t_write split in BENCH_FULL.json names which.
 _STORED_ANN_KEYS = ["knn_cosine_pq_stored", "knn_cosine_ivfpq_stored"]
 
-# read/probe-sized: the loaded codebook/centroid/sample artifacts are
-# memoized per (app, base), so the second construction's only permitted
-# actions are the code-table parquet open and probe-cluster planning
+# read/probe-sized: the loaded codebook/centroid artifacts are memoized
+# with the index per (app, sf_dir), so the second construction's only
+# permitted actions are the fresh query collect, the code-table parquet
+# open and probe-cluster planning
 _REMEASURE_JOB_BOUND = 4
 
 
@@ -89,7 +90,7 @@ def test_stored_ann_remeasure_construction_skips_the_fits(spark, key):
     assert len(jobs) <= _REMEASURE_JOB_BOUND, (
         f"{key}: second construction launched {len(jobs)} Spark jobs — "
         f"more than the read/probe bound of {_REMEASURE_JOB_BOUND}. The "
-        f"stored-index memo (_PQ_MEMO) is being missed and the k-means "
+        f"stored-index memo (_STORED_INDEX_MEMO) is being missed and the k-means "
         f"fits are re-running; the bench's measured pass would pay the "
         f"full index-build cost (the BENCH_r09 21.8 s mystery class)."
     )
@@ -132,11 +133,11 @@ def test_ann_recall_eval_does_not_invalidate_stored_ann_memos(spark):
 
     sc = spark.sparkContext
     QUERIES["knn_cosine_ivfpq_stored"](spark, SF_SMALL)  # warm
-    memo_before = set(S._PQ_MEMO)
+    memo_before = set(S._STORED_INDEX_MEMO)
     QUERIES["ann_recall_eval"](spark, SF_SMALL).collect()
-    assert memo_before <= set(S._PQ_MEMO), (
+    assert memo_before <= set(S._STORED_INDEX_MEMO), (
         "ann_recall_eval evicted stored-ANN memo entries: "
-        f"{memo_before - set(S._PQ_MEMO)}"
+        f"{memo_before - set(S._STORED_INDEX_MEMO)}"
     )
     gid = "stored-ann-after-recall-eval"
     sc.setJobGroup(gid, gid)

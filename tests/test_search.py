@@ -3,6 +3,10 @@ Plus ANN quality: measured recall floors for the LSH and IVF approximate
 paths against exact ground truth (the only way their green status bounds
 result *quality*, not just determinism)."""
 
+import hashlib
+import json
+import os
+
 import numpy as np
 import pytest
 
@@ -10,6 +14,28 @@ from spark_text_clustering_spark.catalog import load_table
 from spark_text_clustering_spark.operators.search import search_corpus
 
 from .conftest import SF_SMALL
+from .oracle_harness import frame_to_multiset
+
+# Row count + multiset hash of each live ANN key and ann_recall_eval at
+# SF_ORACLE, recorded before the index build/probe paths were unified:
+# the refactor must leave every returned row unchanged.
+ANN_GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "goldens", "ann_rows.json")
+
+
+def _collect_digest(df):
+    """Collect ``df``; return (rows, {"rows": n, "sha256": multiset hash})."""
+    import pandas as pd
+
+    rows = df.collect()
+    pdf = pd.DataFrame.from_records([tuple(r) for r in rows], columns=df.columns)
+    digest = hashlib.sha256(repr(frame_to_multiset(pdf)).encode()).hexdigest()
+    return rows, {"rows": len(rows), "sha256": digest}
+
+
+def _assert_ann_golden(key, digest):
+    with open(ANN_GOLDEN_PATH) as f:
+        golden = json.load(f)[key]
+    assert digest == golden, f"{key}: {digest} != golden {golden}"
 
 
 def test_search_self_retrieval(spark):
@@ -47,7 +73,9 @@ def test_ivf_stored_index_matches_per_query_fit(spark):
     )
     from .conftest import SF_ORACLE
 
-    live = {tuple(r) for r in knn_cosine_ivf(spark, SF_ORACLE).collect()}
+    live_rows, digest = _collect_digest(knn_cosine_ivf(spark, SF_ORACLE))
+    _assert_ann_golden("knn_cosine_ivf", digest)
+    live = {tuple(r) for r in live_rows}
     stored = {tuple(r) for r in knn_cosine_ivf_stored(spark, SF_ORACLE).collect()}
     assert stored == live
 
@@ -210,8 +238,8 @@ def test_ivf_stored_index_scan_partition_prunes(spark):
 
 def test_pq_stored_index_matches_memoized(spark):
     """The stored-parquet PQ index (codebooks + code table read back from
-    disk, no retrain/re-encode) must return exactly the memoized
-    `knn_cosine_pq` results — both run the shared `_pq_adc_rerank` probe
+    disk, no retrain/re-encode) must return exactly the live
+    `knn_cosine_pq` results — both run the shared `_pq_probe`
     whose shortlist is the global ADC top-RERANK, deterministic given the
     code-table CONTENT regardless of its partitioning."""
     from spark_text_clustering_spark.operators.similarity import (
@@ -220,7 +248,9 @@ def test_pq_stored_index_matches_memoized(spark):
     )
     from .conftest import SF_ORACLE
 
-    live = {tuple(r) for r in knn_cosine_pq(spark, SF_ORACLE).collect()}
+    live_rows, digest = _collect_digest(knn_cosine_pq(spark, SF_ORACLE))
+    _assert_ann_golden("knn_cosine_pq", digest)
+    live = {tuple(r) for r in live_rows}
     stored = {tuple(r) for r in knn_cosine_pq_stored(spark, SF_ORACLE).collect()}
     assert stored == live
 
@@ -283,11 +313,13 @@ def test_ivfpq_stored_index_matches_memoized(spark):
     )
     from .conftest import SF_ORACLE
 
-    live = {tuple(r) for r in knn_cosine_ivfpq(spark, SF_ORACLE).collect()}
+    live_rows, digest = _collect_digest(knn_cosine_ivfpq(spark, SF_ORACLE))
+    _assert_ann_golden("knn_cosine_ivfpq", digest)
+    live = {tuple(r) for r in live_rows}
     stored = {tuple(r) for r in knn_cosine_ivfpq_stored(spark, SF_ORACLE).collect()}
     assert stored == live
 
-    base = build_ivfpq_index(spark, SF_ORACLE)
+    base, _, _ = build_ivfpq_index(spark, SF_ORACLE)
     probe = spark.read.parquet(f"{base}/codes").where(F.col("cluster").isin([1, 3]))
     plan = spark._jvm.PythonSQLUtils.explainString(
         probe._jdf.queryExecution(), "formatted"
@@ -310,10 +342,9 @@ def test_lsh_stored_index_matches_live(spark):
     )
     from .conftest import SF_ORACLE
 
-    live = {
-        (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in knn_cosine_lsh(spark, SF_ORACLE).collect()
-    }
+    live_rows, digest = _collect_digest(knn_cosine_lsh(spark, SF_ORACLE))
+    _assert_ann_golden("knn_cosine_lsh", digest)
+    live = {(r["id_a"], r["id_b"]): r["cosine_sim"] for r in live_rows}
     stored = {
         (r["id_a"], r["id_b"]): r["cosine_sim"]
         for r in knn_cosine_lsh_stored(spark, SF_ORACLE).collect()
@@ -460,6 +491,17 @@ def test_stored_ann_honors_n_queries_past_sample_bound(spark, tmp_path):
     assert small.select("query_id").distinct().count() == 20
 
 
+def test_ann_recall_eval_matches_golden(spark):
+    """The recall report is built from the live IVF/PQ/IVF+PQ builders
+    and probes; its rows must match the golden recorded before those
+    paths were unified."""
+    from spark_text_clustering_spark.operators.similarity import ann_recall_eval
+    from .conftest import SF_ORACLE
+
+    _, digest = _collect_digest(ann_recall_eval(spark, SF_ORACLE))
+    _assert_ann_golden("ann_recall_eval", digest)
+
+
 def test_bm25_stored_matches_live(spark):
     """The stored-inverted-index probe must reproduce the live
     search_bm25_scores EXACTLY — same docs, same n_terms_hit, same
@@ -527,3 +569,25 @@ def test_silhouette_bounds_and_totals(spark):
         .count()
     )
     assert sum(r["n_points"] for r in rows) == n
+
+
+if __name__ == "__main__":  # print the ANN row digests for one scale factor
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from spark_text_clustering_spark.registry import QUERIES
+    from spark_text_clustering_spark.session import get_session
+
+    from .conftest import SF_ORACLE
+
+    ann_keys = [
+        f"knn_cosine_{kind}{suffix}"
+        for kind in ("lsh", "ivf", "pq", "ivfpq")
+        for suffix in ("", "_stored")
+    ] + ["ann_recall_eval"]
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_ORACLE
+    spark = get_session("ann-digests", master="local[8]", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    digests = {key: _collect_digest(QUERIES[key](spark, sf_dir))[1] for key in ann_keys}
+    print(json.dumps({"sf_dir": sf_dir, "digests": digests}, indent=1, sort_keys=True))
+    spark.stop()

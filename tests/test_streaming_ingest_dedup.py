@@ -169,6 +169,34 @@ def test_streaming_ingest_dedup_minhash(spark, tmp_path):
     assert 201 not in band_ids
 
 
+def test_minhash_store_old_layout_fails_loudly(spark, tmp_path):
+    """A round-14 MinHash store keeps unshingleable survivors in a
+    separate unsigned/ sub-store that today's readers never open. Both
+    the incremental batch path and the streaming read must refuse it
+    instead of silently dropping those survivors."""
+    import pytest
+
+    from spark_text_clustering_spark.operators.dedup import incremental_dedup_minhash
+
+    store = str(tmp_path / "store_r14")
+    spark.createDataFrame(
+        [(1, [7] * 64, "b000000")], "doc_id long, sig array<long>, batch_id string"
+    ).write.partitionBy("batch_id").parquet(f"{store}/signatures")
+    spark.createDataFrame(
+        [(2, "b000000")], "doc_id long, batch_id string"
+    ).write.partitionBy("batch_id").parquet(f"{store}/unsigned")
+
+    docs = spark.createDataFrame([(3, "a fresh document with words")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="unsigned/"):
+        incremental_dedup_minhash(spark, docs, store)
+
+    src = str(tmp_path / "landing_r14")
+    os.makedirs(src)
+    _write_file(spark, src, "f0", [(3, "a fresh document with words", "en", "src", 27)])
+    with pytest.raises(ValueError, match="unsigned/"):
+        streaming_ingest_dedup(spark, src, store, str(tmp_path / "ckpt_r14"), minhash=True)
+
+
 def test_streaming_lda_serving_matches_batch(spark, tmp_path):
     """LDA topic scoring served on a stream (the reference's own serving
     path) must reproduce batch scoring exactly: every stage after

@@ -4,8 +4,9 @@
   (LDATraining.scala:5-21, LDAClustering.scala:20-96): corpus → clean →
   tokenize → stopword-filter → deterministic vocab → TF-IDF (floored) →
   EM/Online LDA → save model → topic summary.
-* ``run_scoring`` ⇔ ``LDALoader`` (LDALoader.scala:11-214): load newest
-  model → score ALL documents in one ``model.transform`` pass (the
+* ``run_scoring`` ⇔ ``LDALoader`` (LDALoader.scala:11-214): load the newest
+  model dir's scoring artifact (``ml.lda`` docstring) → featurize with the
+  saved vectorizer → score ALL documents in one ``model.transform`` pass (the
   reference loops per book, collapsing the distributed model to the driver
   every iteration — SURVEY §4.2 anti-patterns (a)-(c), all fixed here) →
   argmax main topic → books-per-topic report → JSON report sink.
@@ -17,7 +18,6 @@ sentinels resolved to α=11.0 / β=1.1 by the EM optimizer).
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,7 +32,7 @@ from .ml.lda import (
     topic_report,
     train_lda,
 )
-from .ml.vectorize import vectorize, vocabulary_table
+from .ml.vectorize import featurize, vectorize
 from .sources.text_corpus import read_text_corpus
 
 
@@ -123,7 +123,7 @@ def run_training(
         )
 
     docs = _corpus_from_path(spark, corpus_path)
-    vectorized, pipeline_model = vectorize(
+    vectorized, vectorizer = vectorize(
         docs,
         vocab_size=params.vocab_size,
         stopwords=params.stopwords,
@@ -148,14 +148,12 @@ def run_training(
         topic_concentration=params.topic_concentration,
         corpus_size=corpus_size,
     )
-    model_path = save_model(lda_model, model_dir, lang=lang)
-    pipeline_model.write().overwrite().save(os.path.join(model_path, "vectorizer"))
+    model_path = save_model(lda_model, vectorizer, model_dir, lang=lang)
 
-    vocab_df = vocabulary_table(pipeline_model, spark)
-    topics = describe_topics_with_terms(lda_model, vocab_df, max_terms=10)
+    topics = describe_topics_with_terms(lda_model, vectorizer.vocabulary, max_terms=10)
     summary = {
         "corpus_size": corpus_size,
-        "vocab_size": len(pipeline_model.stages[2].vocabulary),
+        "vocab_size": len(vectorizer.vocabulary),
         "model_path": model_path,
         "topics": {r["topic"]: r["terms"] for r in topics.collect()},
     }
@@ -172,20 +170,9 @@ def run_scoring(
     """Score every document in one batch pass and write the structured JSON
     report (reference S7 writes a text file via PrintWriter,
     LDALoader.scala:210-212)."""
-    from pyspark.ml import PipelineModel
-
-    model_path, lda_model = load_newest_model(model_dir, lang=lang)
-    pipeline_model = PipelineModel.load(os.path.join(model_path, "vectorizer"))
-
+    _, lda_model, vectorizer = load_newest_model(model_dir, lang=lang)
     docs = _corpus_from_path(spark, corpus_path)
-    from .ml.vectorize import apply_idf_floor, clean_documents
-    import numpy as np
-
-    cleaned = clean_documents(docs).where(F.length("clean_text") > 0)
-    transformed = pipeline_model.transform(cleaned).where(F.size("tokens") > 0)
-    floored = apply_idf_floor(transformed, np.asarray(pipeline_model.stages[3].idf.toArray()))
-
-    scored = score_documents(lda_model, floored.select("doc_id", "tfidf"))
+    scored = score_documents(lda_model, featurize(docs, vectorizer).select("doc_id", "tfidf"))
     report = topic_report(scored)
     report.write.mode("overwrite").json(report_path)
     return scored

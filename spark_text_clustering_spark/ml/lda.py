@@ -14,7 +14,13 @@ Key reference semantics preserved:
 Anti-patterns fixed (SURVEY §4.2): the per-book scoring loop with
 ``toLocal`` per iteration (LDALoader.scala:108) becomes ONE
 ``model.transform`` over all documents; the O(V) ``indexOf`` vocab remap
-(:101) is gone because train and score share one CountVectorizerModel.
+(:101) is gone because train and score share one fitted ``Vectorizer``.
+
+Model dir (``save_model``): ``LdaModel_<lang>_<millis>/`` holds the trained
+model as ``model.write()`` saves it (reference S5) and ``scoring/``, all
+that scoring reads: ``scoring/model/`` (the local model, trained params
+copied on) and ``scoring/vectorizer/`` (one row: the ``Vectorizer`` fields
+and ``format_version``). Another version or no ``scoring/`` fails loudly.
 
 Scale: EM-LDA's per-iteration cost is the GraphX-style doc↔term message
 passing inside Spark ML — dominated by |corpus nonzeros|; Online LDA
@@ -28,14 +34,24 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.ml.clustering import LDA, DistributedLDAModel, LocalLDAModel
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+
+from pyspark.ml.clustering import LDA, LocalLDAModel
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .vectorize import Vectorizer
 
 DEFAULT_K = 5
 DEFAULT_MAX_ITER = 50
 DEFAULT_ALPHA = 11.0  # EM default (50/k)+1 for k=5 — Params.scala `-1` sentinel
 DEFAULT_BETA = 1.1
+# bump on any change to the scoring/ layout; older dirs then fail loudly
+SCORING_FORMAT_VERSION = 1
+_VECTORIZER_ROW = (
+    "format_version int, vocabulary array<string>, idf array<double>, "
+    "stopwords array<string>, lemmatize boolean"
+)
 
 
 def train_lda(
@@ -82,31 +98,16 @@ def train_lda(
     return lda.fit(corpus)
 
 
-def describe_topics_with_terms(model, vocab_df: DataFrame, max_terms: int = 10) -> DataFrame:
-    """M6: describeTopics joined back to term strings via the vocabulary
-    table (posexplode + broadcast join — replaces the reference's
-    driver-side ``vocabArray(idx)`` mapping, LDAClustering.scala:81-92)."""
+def describe_topics_with_terms(model, vocabulary: list[str], max_terms: int = 10) -> DataFrame:
+    """M6: describeTopics' k × ``max_terms`` term ids mapped through the
+    vocabulary list (the reference's driver-side ``vocabArray(idx)``,
+    LDAClustering.scala:81-92). Both sides are model-sized."""
     topics = model.describeTopics(max_terms)
-    exploded = topics.select(
-        "topic",
-        F.posexplode(F.arrays_zip("termIndices", "termWeights")).alias("pos", "tw"),
-    ).select(
-        "topic",
-        "pos",
-        F.col("tw.termIndices").alias("term_id"),
-        F.col("tw.termWeights").alias("weight"),
-    )
-    joined = exploded.join(F.broadcast(vocab_df), "term_id", "inner")
-    return (
-        joined.groupBy("topic")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("pos", "term"))).alias("ordered"),
-        )
-        .select(
-            "topic",
-            F.transform("ordered", lambda s: s.term).alias("terms"),
-        )
-    )
+    rows = [
+        (r["topic"], [vocabulary[i] for i in r["termIndices"]])
+        for r in topics.select("topic", "termIndices").collect()
+    ]
+    return topics.sparkSession.createDataFrame(rows, "topic int, terms array<string>")
 
 
 def score_documents(model, corpus: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -143,26 +144,43 @@ def topic_report(scored: DataFrame, doc_name_col: str = "doc_id") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def save_model(model, base_dir: str, lang: str = "EN") -> str:
+def save_model(model, vectorizer: Vectorizer, base_dir: str, lang: str = "EN") -> str:
     """S5: ``LdaModel_<lang>_<millis>`` timestamped save
-    (LDAClustering.scala:70-72). The vocabulary lives inside the pipeline
-    model's CountVectorizerModel — no side text file needed."""
+    (LDAClustering.scala:70-72), plus the ``scoring/`` artifact."""
     path = os.path.join(base_dir, f"LdaModel_{lang}_{int(time.time() * 1000)}")
     model.write().overwrite().save(path)
+    local = model.toLocal() if model.isDistributed() else model
+    # the Python wrapper toLocal() returns carries default params (k=10, a
+    # random seed), which its save would write over the trained ones
+    model._copyValues(local)
+    local.write().save(os.path.join(path, "scoring", "model"))
+    v = vectorizer
+    row = (SCORING_FORMAT_VERSION, v.vocabulary, v.idf.tolist(), v.stopwords, v.lemmatize)
+    SparkSession.active().createDataFrame([row], _VECTORIZER_ROW).write.parquet(
+        os.path.join(path, "scoring", "vectorizer")
+    )
     return path
 
 
-def load_newest_model(base_dir: str, lang: str = "EN"):
-    """S4/S6: pick the newest ``LdaModel_<lang>_*`` dir by name sort
-    (LDALoader.scala:25-37). Returns ``(path, model)``: the caller loads
-    the vectorizer saved beside the model from ``path``, so a model saved
-    after this listing cannot pair one run's LDA with another's vocabulary."""
+def load_newest_model(base_dir: str, lang: str = "EN") -> tuple[str, LocalLDAModel, Vectorizer]:
+    """S4/S6: the newest ``LdaModel_<lang>_*`` dir by name sort
+    (LDALoader.scala:25-37) and its ``scoring/`` artifact, as
+    ``(path, local_model, vectorizer)`` — both from one dir."""
     prefix = f"LdaModel_{lang}_"
     candidates = sorted(d for d in os.listdir(base_dir) if d.startswith(prefix))
     if not candidates:
         raise FileNotFoundError(f"no {prefix}* model under {base_dir}")
     path = os.path.join(base_dir, candidates[-1])
-    try:
-        return path, DistributedLDAModel.load(path)
-    except Exception:
-        return path, LocalLDAModel.load(path)
+    scoring = os.path.join(path, "scoring")
+    if not os.path.isdir(scoring):
+        raise ValueError(f"model dir {path} has no scoring/ artifact; retrain it")
+    reader = SparkSession.active().read.schema(_VECTORIZER_ROW)
+    row = reader.parquet(os.path.join(scoring, "vectorizer")).first()
+    version = row["format_version"] if row else None
+    if version != SCORING_FORMAT_VERSION:
+        raise ValueError(f"model dir {path} has scoring format {version}, not "
+                         f"{SCORING_FORMAT_VERSION}; retrain it")
+    vectorizer = Vectorizer(
+        row["vocabulary"], np.asarray(row["idf"]), row["stopwords"], row["lemmatize"]
+    )
+    return path, LocalLDAModel.load(os.path.join(scoring, "model")), vectorizer

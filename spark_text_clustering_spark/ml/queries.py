@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from .._registry import Registry
 from ..catalog import load_table
 from .lda import describe_topics_with_terms, score_documents, topic_report, train_lda
-from .vectorize import EmptyCorpusError, vectorize, vocabulary_table
+from .vectorize import EmptyCorpusError, vectorize
 
 REG = Registry()
 
@@ -69,12 +69,11 @@ def lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms. k rows, deterministic under the fixed seed. Term list serialized
     space-joined so the output schema stays atomic for external hashers."""
     try:
-        _df, model = _vectorized(spark, sf_dir)
+        _df, vectorizer = _vectorized(spark, sf_dir)
     except EmptyCorpusError:
         return _empty(spark, "topic int, terms string")
     lda_model = _trained_lda(spark, sf_dir)
-    vocab = vocabulary_table(model, spark)
-    out = describe_topics_with_terms(lda_model, vocab, max_terms=10)
+    out = describe_topics_with_terms(lda_model, vectorizer.vocabulary, max_terms=10)
     return out.withColumn("terms", F.concat_ws(" ", "terms"))
 
 

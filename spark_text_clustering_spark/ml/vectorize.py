@@ -1,46 +1,35 @@
-"""Text vectorization pipeline — reference parity for ``TFIDfVectorizer``
-(LDAClustering.scala:99-277) as a ``pyspark.ml.Pipeline``.
+"""Text vectorization — reference parity for ``TFIDfVectorizer``
+(LDAClustering.scala:99-277).
 
-Reference chain → rebuild stage:
-* regex clean (P2, :283-284)        → handled upstream via regexp_replace
-* tokenize (P5, :133-135)           → RegexTokenizer(pattern="\\s+")
-* stopword+len filter (P6, :125-136)→ StopWordsRemover (case-sensitive,
-                                      exact match, pre-stemming — same order)
-* Porter stem (P7, :134-137)        → porter-lite pandas UDF (operators.text)
-* empty-doc filter (P8, :139)       → filter(size(tokens) > 0)
-* vocab top-k + dense ids (T1/T2,
-  :148-151) + per-doc counts (A4,
-  :154-167)                          → CountVectorizer(vocabSize, ordered by
-                                      freq; ties broken arbitrarily by Spark
-                                      — our explicit vocab variant adds the
-                                      lexicographic tiebreak)
-* IDF minDocFreq=2 (M2, :177)       → pyspark.ml.feature.IDF(minDocFreq=2)
-                                      (same formula log((m+1)/(df+1)))
-* TF×IDF with 1e-4 floor (M3,
-  :180-192)                          → custom floor transform (non-standard
-                                      semantics, must be custom)
+``fit_vectorizer`` returns a ``Vectorizer``: the vocabulary list, the idf
+array, the stopwords and the lemmatize flag, the whole fitted state.
+``featurize`` runs the chain from that value, so training, scoring, search
+and serving share one transform:
 
-The reference's driver-local vocab ``Map[String,Int]`` closure-captured
-into tasks (J1) becomes the CountVectorizerModel's broadcast vocabulary —
-sent once per executor.
+P2 regex clean (:283-284) → P3 lemmatize (:116-121; only with the
+``lemmatize`` flag) → P5 whitespace tokenize (:133-135) → P6 exact,
+case-sensitive stopword filter (:125-136) → P8 empty-doc drop (:139) → A4
+counts (:154-167) over the T1/T2 vocabulary (:148-151; count desc, token
+asc) → M2 IDF, minDocFreq=2, log((m+1)/(df+1)) (:177) → M3 TF×IDF with the
+1e-4 floor (:180-192; non-standard, custom). The reference's P7 Porter
+stem (:134-137) is not run (ROADMAP item 7).
 
-Scale: every stage is a narrow map except CountVectorizer.fit (one
-aggregation shuffle to rank the vocabulary) and IDF.fit (one treeAggregate
-for document frequencies). Nothing collects rows to the driver; the only
-driver-held state is the vocab/idf arrays, which are model parameters
-(bounded by vocabSize, not corpus size).
+Scale: every step is a narrow map except the vocabulary ranking (one
+aggregation shuffle) and IDF.fit (one treeAggregate for document
+frequencies). The only driver-held state is the vocab/idf arrays: model
+parameters bounded by vocabSize, not corpus size, sent once per executor
+(the reference closure-captures its vocab map into every task, J1).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+from dataclasses import dataclass
 
-from pyspark.ml import Pipeline, PipelineModel
+import numpy as np
+
 from pyspark.ml.feature import CountVectorizerModel, IDF, RegexTokenizer, StopWordsRemover
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.textnorm import CLEAN_PATTERN, STOPWORDS
 
@@ -85,17 +74,27 @@ def lemmatize_documents(docs: DataFrame, text_col: str = "clean_text") -> DataFr
     return docs.mapInPandas(batches, schema=docs.schema)
 
 
-def _token_stages(stopwords: list[str] | None) -> list:
+@dataclass(frozen=True, eq=False)
+class Vectorizer:
+    """A fitted vectorizer: the whole state ``featurize`` needs. Every
+    field is vocabulary- or parameter-sized, never corpus-sized."""
+
+    vocabulary: list[str]  # term id -> term (T2 dense ids)
+    idf: np.ndarray  # M2 idf per term id, before the M3 floor
+    stopwords: list[str]  # P6
+    lemmatize: bool  # P3
+
+
+def _tokenize(cleaned: DataFrame, stopwords: list[str]) -> DataFrame:
+    """P5 whitespace tokenize + P6 stopword filter (case-sensitive, exact
+    match) of ``clean_text`` into ``tokens``."""
     tokenizer = RegexTokenizer(
         inputCol="clean_text", outputCol="raw_tokens", pattern=r"\s+", toLowercase=True
     )
     remover = StopWordsRemover(
-        inputCol="raw_tokens",
-        outputCol="tokens",
-        stopWords=list(stopwords if stopwords is not None else STOPWORDS),
-        caseSensitive=True,
+        inputCol="raw_tokens", outputCol="tokens", stopWords=list(stopwords), caseSensitive=True
     )
-    return [tokenizer, remover]
+    return remover.transform(tokenizer.transform(cleaned))
 
 
 def build_deterministic_vocab(tokens_df: DataFrame, vocab_size: int) -> list[str]:
@@ -126,32 +125,56 @@ def _preprocess(docs: DataFrame, lemmatize: bool) -> DataFrame:
     return cleaned
 
 
-def fit_vectorizer(docs: DataFrame, **kwargs) -> PipelineModel:
+def _tokens(docs: DataFrame, lemmatize: bool, stopwords: list[str]) -> DataFrame:
+    """P2 (+P3) → P5/P6 → P8 (LDAClustering.scala:139): docs with no
+    surviving token are dropped before the vocab build and IDF fit, so
+    document frequencies use the surviving corpus size m (the reference's
+    idf is computed on the filtered corpus)."""
+    return _tokenize(_preprocess(docs, lemmatize), stopwords).where(F.size("tokens") > 0)
+
+
+def _count_model(vocabulary: list[str]) -> CountVectorizerModel:
+    """A4 counts over a fixed vocabulary. The list crosses to the JVM as
+    one newline-joined string split there (tokens never hold whitespace):
+    ``CountVectorizerModel.from_vocabulary`` sets the array one py4j call
+    per term, 0.4 s of driver CPU at 10k terms."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._active_spark_context._jvm
+    jvocab = jvm.java.util.regex.Pattern.compile("\n").split("\n".join(vocabulary))
+    model = CountVectorizerModel._create_from_java_class(
+        "org.apache.spark.ml.feature.CountVectorizerModel", jvocab
+    )
+    return model.setInputCol("tokens").setOutputCol("tf")
+
+
+def fit_vectorizer(docs: DataFrame, **kwargs) -> Vectorizer:
     """Fit with a deterministic vocabulary: tokenize → rank vocab with the
-    lexicographic tiebreak → ``CountVectorizerModel.from_vocabulary`` →
-    fit IDF on the resulting counts."""
+    lexicographic tiebreak → count over that vocabulary → fit IDF on the
+    counts."""
     vocab_size = kwargs.get("vocab_size", 10_000)
     stopwords = kwargs.get("stopwords")
+    stopwords = list(STOPWORDS if stopwords is None else stopwords)
     min_doc_freq = kwargs.get("min_doc_freq", 2)
     lemmatize = kwargs.get("lemmatize", False)
 
-    cleaned = _preprocess(docs, lemmatize)
-    tok_pipeline = Pipeline(stages=_token_stages(stopwords)).fit(cleaned)
-    # P8 (LDAClustering.scala:139): drop empty-token docs BEFORE the vocab
-    # build and IDF fit, so document frequencies use the surviving corpus
-    # size m (the reference's idf is computed on the filtered corpus).
-    tokenized = tok_pipeline.transform(cleaned).where(F.size("tokens") > 0)
-    vocab = build_deterministic_vocab(tokenized, vocab_size)
+    tokens = _tokens(docs, lemmatize, stopwords)
+    vocab = build_deterministic_vocab(tokens, vocab_size)
     if not vocab:
         raise EmptyCorpusError(
             "no tokens survive preprocessing — cannot fit a vocabulary"
         )
-    cv_model = CountVectorizerModel.from_vocabulary(
-        vocab, inputCol="tokens", outputCol="tf"
+    idf_model = IDF(inputCol="tf", minDocFreq=min_doc_freq).fit(
+        _count_model(vocab).transform(tokens)
     )
-    idf = IDF(inputCol="tf", outputCol="tfidf_raw", minDocFreq=min_doc_freq)
-    idf_model = idf.fit(cv_model.transform(tokenized))
-    return PipelineModel(stages=[*tok_pipeline.stages, cv_model, idf_model])
+    return Vectorizer(vocab, np.asarray(idf_model.idf.toArray()), stopwords, lemmatize)
+
+
+def featurize(docs: DataFrame, vectorizer: Vectorizer) -> DataFrame:
+    """The chain of the module docstring under a fitted vectorizer: adds
+    ``clean_text``, ``raw_tokens``, ``tokens``, ``tf`` and ``tfidf``."""
+    tokens = _tokens(docs, vectorizer.lemmatize, vectorizer.stopwords)
+    return apply_idf_floor(_count_model(vectorizer.vocabulary).transform(tokens), vectorizer.idf)
 
 
 def apply_idf_floor(df: DataFrame, idf_values: np.ndarray) -> DataFrame:
@@ -159,26 +182,14 @@ def apply_idf_floor(df: DataFrame, idf_values: np.ndarray) -> DataFrame:
     get weight tf × 1e-4 instead of 0, so rare-term signal never vanishes
     (LDAClustering.scala:180-192; non-standard, replicated as-is).
 
-    One physical strategy for every vocab width (round 13, ADVICE r12):
     ``ElementwiseProduct`` with the effective-idf vector as its scaling
-    parameter. That is simultaneously
-
-    * **JVM-side** — a Scala UDF inside the whole-stage-codegen Project
-      (no Python stage, no Arrow round-trip; VERDICT r11 #5 kept), and
-    * **sparse-preserving** — mllib's hadamard transform multiplies a
-      SparseVector's ACTIVE values in place and rebuilds the same index
-      set (the floor multiplies by a nonzero scalar, so the active set
-      is unchanged). The reference likewise never densifies its
-      doc-term matrix (LDAClustering.scala:165,191 keeps SparseVector
-      end-to-end). The round-12 ``zip_with`` dense-array form was
-      JVM-side too but emitted DenseVectors (~vocab/nnz memory blow-up
-      through cache/shuffle/LDA at the 10 k-vocab default — ADVICE r12
-      medium); this replaces it with no threshold to tune.
-
-    The scaling vector is a model parameter carried once per task
-    closure — O(vocab) doubles (23 MB at the reference's 2.9 M vocab
-    cap), not O(corpus). Bit-identical to both prior paths: one IEEE
-    double multiply per active term (test_ml goldens lock the values).
+    parameter is JVM-side (a Scala UDF in the codegen Project, no Python
+    stage) and sparse-preserving: it multiplies a SparseVector's active
+    values and keeps the index set, as the reference keeps SparseVector
+    end to end (LDAClustering.scala:165,191). The scaling vector is a
+    model parameter carried once per task closure, O(vocab) doubles (23 MB
+    at the reference's 2.9 M vocab cap). One IEEE double multiply per
+    active term; the test_ml goldens lock the values.
     """
     from pyspark.ml.feature import ElementwiseProduct
     from pyspark.ml.linalg import Vectors
@@ -192,22 +203,8 @@ def apply_idf_floor(df: DataFrame, idf_values: np.ndarray) -> DataFrame:
     return ep.transform(df)
 
 
-def vectorize(docs: DataFrame, **kwargs) -> tuple[DataFrame, PipelineModel]:
+def vectorize(docs: DataFrame, **kwargs) -> tuple[DataFrame, Vectorizer]:
     """Full reference-parity vectorization: returns (df with tf/tfidf
-    columns, fitted pipeline model)."""
-    model = fit_vectorizer(docs, **kwargs)
-    cleaned = _preprocess(docs, kwargs.get("lemmatize", False))
-    out = model.transform(cleaned)
-    out = out.where(F.size("tokens") > 0)  # P8: drop docs with no surviving tokens
-    idf_model = model.stages[-1]
-    return apply_idf_floor(out, np.asarray(idf_model.idf.toArray())), model
-
-
-def vocabulary_table(model: PipelineModel, spark) -> DataFrame:
-    """(term, term_id) broadcast-join form of the fitted vocabulary —
-    replaces the reference's comma-joined vocab text file (S3/S5,
-    LDAClustering.scala:71-72, LDALoader.scala:43)."""
-    vocab = model.stages[2].vocabulary
-    return spark.createDataFrame(
-        [(t, i) for i, t in enumerate(vocab)], "term string, term_id int"
-    )
+    columns, fitted vectorizer)."""
+    vectorizer = fit_vectorizer(docs, **kwargs)
+    return featurize(docs, vectorizer), vectorizer

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .._registry import Registry
 from ..catalog import load_table
-from ..ml.vectorize import EmptyCorpusError, vectorize
+from ..ml.vectorize import EmptyCorpusError, featurize, vectorize
 
 REG = Registry()
 
@@ -88,12 +88,12 @@ def search_corpus(
     spark: SparkSession, sf_dir: str, queries: list[str], k: int = 10
 ) -> DataFrame:
     """End-to-end: vectorize the corpus once, push each query string
-    through the SAME fitted pipeline (identical vocab/idf — the consistency
+    through the SAME fitted vectorizer (identical vocab/idf — the consistency
     the reference enforces via its global-vocabulary remap, LDALoader.scala:
     97-105, here guaranteed by construction), then rank."""
     docs = load_table(spark, sf_dir, "documents")
     try:
-        vectorized, model = vectorize(docs, vocab_size=10_000, min_doc_freq=2)
+        vectorized, vectorizer = vectorize(docs, vocab_size=10_000, min_doc_freq=2)
     except EmptyCorpusError:  # empty-in -> empty-out
         return spark.createDataFrame(
             [], "query_id long, doc_id long, score double, rank int"
@@ -112,12 +112,7 @@ def search_corpus(
     qdf = spark.createDataFrame(
         [(i, q) for i, q in enumerate(queries)], "query_id long, text string"
     )
-    from ..ml.vectorize import apply_idf_floor, clean_documents
-    import numpy as np
-
-    cleaned = clean_documents(qdf)
-    transformed = model.transform(cleaned)
-    floored = apply_idf_floor(transformed, np.asarray(model.stages[3].idf.toArray()))
+    floored = featurize(qdf, vectorizer)
     query_entries = _sparse_entries(
         floored.select(F.col("query_id").alias("doc_id"), "tfidf"), "doc_id", "tfidf"
     ).select(F.col("doc_id").alias("query_id"), "term_id", "weight")
@@ -135,7 +130,7 @@ def _search_tfidf_oracle() -> str:
     T1 deterministic vocab (cnt desc, token asc, top 10k) → M2 IDF
     (ln((m+1)/(df+1)), minDocFreq=2 → 0) → M3 1e-4 floor (df<2 OR df=m)
     → sparse cosine → top-5 per query with the doc_id tiebreak. Every
-    stage is the fitted PipelineModel's exact arithmetic; scores round
+    stage is ``featurize``'s exact arithmetic; scores round
     to 6 decimals on both sides, absorbing ln/summation-order ulps.
     The inlined query tokens assume the fixed queries are lowercase and
     punctuation-free (they are — _SEARCH_QUERIES)."""

@@ -169,8 +169,8 @@ def serve_lda_topics_stream(
     timeout_sec: int = 300,
 ) -> DataFrame:
     """The reference's OWN serving path, on a stream: train the
-    vectorizer + LDA once in batch (frozen CountVectorizerModel / IDF /
-    LDA model — all per-doc deterministic transforms), then topic-score
+    vectorizer + LDA once in batch (frozen ``Vectorizer`` and LDA model —
+    per-doc deterministic transforms), then ``featurize`` and topic-score
     each arriving microbatch in ``foreachBatch`` with ONE
     ``model.transform`` (the rebuild of LDALoader's per-book loop) and
     append (doc_id, topic_dist, main_topic) to parquet. Every stage is a
@@ -179,22 +179,17 @@ def serve_lda_topics_stream(
     agree to variational-inference tolerance (LDAModel.transform uses a
     randomized gamma init; ~1e-5 observed) — asserted in
     tests/test_streaming_ingest_dedup.py."""
-    import numpy as np
-
     from ..catalog import load_table
     from ..ml.lda import score_documents, train_lda
-    from ..ml.vectorize import _preprocess, apply_idf_floor, vectorize
+    from ..ml.vectorize import featurize, vectorize
 
     train_docs = load_table(spark, sf_train_dir, "documents")
-    vec, pipeline_model = vectorize(train_docs, vocab_size=50_000, min_doc_freq=2)
+    vec, vectorizer = vectorize(train_docs, vocab_size=50_000, min_doc_freq=2)
     corpus = vec.select("doc_id", "tfidf")
     lda_model = train_lda(corpus, k=k, max_iter=max_iter, optimizer="em", seed=42)
-    idf_values = np.asarray(pipeline_model.stages[-1].idf.toArray())
 
     def _score_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        cleaned = _preprocess(batch_df, False)
-        feat = pipeline_model.transform(cleaned).where(F.size("tokens") > 0)
-        feat = apply_idf_floor(feat, idf_values).select("doc_id", "tfidf")
+        feat = featurize(batch_df, vectorizer).select("doc_id", "tfidf")
         # per-epoch partition overwrite: a replayed (at-least-once) epoch
         # replaces rather than double-appends its scores (round-7 fix)
         score_documents(lda_model, feat).write.mode("overwrite").parquet(

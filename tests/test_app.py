@@ -4,12 +4,17 @@ lifecycle on a temp corpus)."""
 
 import json
 import os
+import re
+import shutil
 
 import pytest
 
+from spark_text_clustering_spark import app
 from spark_text_clustering_spark.app import Params, run_scoring, run_training
-from spark_text_clustering_spark.ml.lda import load_newest_model
+from spark_text_clustering_spark.ml.lda import SCORING_FORMAT_VERSION, load_newest_model
 from spark_text_clustering_spark.sources.text_corpus import read_stopwords, read_text_corpus
+
+from .conftest import SF_SMALL
 
 BOOKS = {
     "cats.txt": "The cat sat on the mat. Cats purr! A cat ran; cats sleep.",
@@ -71,9 +76,116 @@ def test_newest_model_wins(spark, corpus_dir, tmp_path_factory):
     first = run_training(spark, corpus_dir, model_dir, params)
     second = run_training(spark, corpus_dir, model_dir, params)
     assert sorted(os.listdir(model_dir))[-1] == os.path.basename(second["model_path"])
-    # one listing names both the LDA model and the vectorizer beside it
-    path, _ = load_newest_model(model_dir)
+    # one listing names the dir both the LDA model and the vectorizer come from
+    path, _, _ = load_newest_model(model_dir)
     assert path == second["model_path"]
+
+
+def _scores(spark, corpus_dir, model_dir, report_dir) -> dict:
+    scored = run_scoring(spark, corpus_dir, model_dir, report_dir)
+    return {r["doc_id"]: list(r["topic_dist"]) for r in scored.collect()}
+
+
+def test_scoring_bit_identical_across_calls(spark, tmp_path_factory):
+    """Each run_scoring call loads the model afresh; the saved local model
+    carries the trained seed, so two calls agree bit for bit. (Scoring
+    through the DistributedLDAModel re-seeded on every call: on these 500
+    docs two calls differed by up to ~1e-5 per topic_dist entry.)"""
+    corpus = os.path.join(SF_SMALL, "documents.parquet")
+    model_dir = str(tmp_path_factory.mktemp("models_det"))
+    out = str(tmp_path_factory.mktemp("out_det"))
+    run_training(spark, corpus, model_dir, Params(k=2, max_iterations=10, vocab_size=1000))
+    first = _scores(spark, corpus, model_dir, os.path.join(out, "r0"))
+    second = _scores(spark, corpus, model_dir, os.path.join(out, "r1"))
+    assert len(first) > 100
+    assert first == second
+
+
+def test_scoring_featurizes_like_training_with_lemmatize(
+    spark, corpus_dir, tmp_path_factory, monkeypatch
+):
+    """A model trained with P3 lemmatization is scored on lemmas too: the
+    tfidf run_scoring computes for the training corpus equals the tfidf
+    run_training computed."""
+    seen = {}
+    vectorize, score_documents = app.vectorize, app.score_documents
+
+    def tfidf_by_doc(df):
+        return {r["doc_id"]: r["tfidf"] for r in df.select("doc_id", "tfidf").collect()}
+
+    def capture_vectorize(*args, **kwargs):
+        df, vectorizer = vectorize(*args, **kwargs)
+        seen["train"] = tfidf_by_doc(df)
+        return df, vectorizer
+
+    def capture_score(model, corpus, *args, **kwargs):
+        seen["score"] = tfidf_by_doc(corpus)
+        return score_documents(model, corpus, *args, **kwargs)
+
+    monkeypatch.setattr(app, "vectorize", capture_vectorize)
+    monkeypatch.setattr(app, "score_documents", capture_score)
+    model_dir = str(tmp_path_factory.mktemp("models_lemma_score"))
+    report = os.path.join(str(tmp_path_factory.mktemp("out_lemma")), "report")
+    params = Params(k=2, max_iterations=5, vocab_size=1000, lemmatize=True)
+    app.run_training(spark, corpus_dir, model_dir, params)
+    app.run_scoring(spark, corpus_dir, model_dir, report)
+    assert seen["train"] and seen["score"] == seen["train"]
+
+
+def _tree(path: str) -> list:
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), path), os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+@pytest.fixture(scope="module")
+def trained_model(spark, corpus_dir, tmp_path_factory):
+    """The newest model dir of one training run, to copy and then damage."""
+    model_dir = str(tmp_path_factory.mktemp("models_src"))
+    return run_training(
+        spark, corpus_dir, model_dir, Params(k=2, max_iterations=5, vocab_size=1000)
+    )["model_path"]
+
+
+def _assert_scoring_rejects(spark, corpus_dir, base, model_path, report):
+    before = _tree(base)
+    with pytest.raises(ValueError, match=re.escape(f"model dir {model_path} ")):
+        run_scoring(spark, corpus_dir, base, report)
+    assert _tree(base) == before  # never upgraded in place
+    assert not os.path.exists(report)
+
+
+def test_scoring_rejects_dir_without_scoring_artifact(
+    spark, corpus_dir, trained_model, tmp_path
+):
+    """The earlier layout (a DistributedLDAModel plus a fitted PipelineModel
+    in vectorizer/) has no scoring/ artifact: scoring names the dir and
+    fails rather than guessing."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.feature import RegexTokenizer
+
+    base = str(tmp_path / "models")
+    old = os.path.join(base, os.path.basename(trained_model))
+    shutil.copytree(trained_model, old, ignore=shutil.ignore_patterns("scoring"))
+    PipelineModel(stages=[RegexTokenizer(inputCol="clean_text", outputCol="raw_tokens")]) \
+        .write().save(os.path.join(old, "vectorizer"))
+    _assert_scoring_rejects(spark, corpus_dir, base, old, str(tmp_path / "report"))
+
+
+def test_scoring_rejects_other_format_version(spark, corpus_dir, trained_model, tmp_path):
+    base = str(tmp_path / "models")
+    other = os.path.join(base, os.path.basename(trained_model))
+    shutil.copytree(trained_model, other)
+    row_dir = os.path.join(other, "scoring", "vectorizer")
+    df = spark.read.parquet(row_dir)
+    schema, row = df.schema, df.first().asDict()
+    assert row["format_version"] == SCORING_FORMAT_VERSION
+    row["format_version"] = SCORING_FORMAT_VERSION + 1
+    shutil.rmtree(row_dir)
+    spark.createDataFrame([tuple(row[f.name] for f in schema)], schema).write.parquet(row_dir)
+    _assert_scoring_rejects(spark, corpus_dir, base, other, str(tmp_path / "report"))
 
 
 def test_train_with_lemmatize_stage(spark, corpus_dir, tmp_path_factory):

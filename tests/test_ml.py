@@ -10,11 +10,11 @@ from pyspark.sql import functions as F
 from spark_text_clustering_spark.catalog import load_table
 from spark_text_clustering_spark.ml.vectorize import (
     IDF_FLOOR,
+    _tokenize,
     build_deterministic_vocab,
     clean_documents,
     fit_vectorizer,
     vectorize,
-    vocabulary_table,
 )
 from spark_text_clustering_spark.ml.lda import (
     describe_topics_with_terms,
@@ -52,7 +52,7 @@ def test_token_stages_golden(spark, mini):
     cleaned = clean_documents(mini).where(F.length("clean_text") > 0)
     toks = {
         r["doc_id"]: r["tokens"]
-        for r in model.transform(cleaned).select("doc_id", "tokens").collect()
+        for r in _tokenize(cleaned, model.stopwords).select("doc_id", "tokens").collect()
     }
     assert toks[0] == ["cat", "sat", "cat", "ran"]  # 'the' removed, dup kept
     assert toks[2] == []  # all-stopword doc -> empty (dropped later by P8)
@@ -60,7 +60,7 @@ def test_token_stages_golden(spark, mini):
 
 def test_vocab_deterministic_tiebreak(spark, mini):
     model = fit_vectorizer(mini, vocab_size=100, min_doc_freq=2)
-    vocab = model.stages[2].vocabulary
+    vocab = model.vocabulary
     # hand-computed: dogs(4), cat(2), then cnt=1 terms lexicographic
     assert vocab == ["dogs", "cat", "cats", "fast", "ran", "run", "running", "sat"]
 
@@ -73,7 +73,7 @@ def test_idf_floor_golden(spark, mini):
         r["doc_id"]: r["arr"]
         for r in df.select("doc_id", vector_to_array("tfidf").alias("arr")).collect()
     }
-    vocab = model.stages[2].vocabulary
+    vocab = model.vocabulary
     dogs_idx, run_idx = vocab.index("dogs"), vocab.index("run")
     # m = 3 non-empty docs; df(dogs) = 2 -> idf = log(4/3); df(run) = 1 -> idf 0 -> floor
     assert rows[1][dogs_idx] == pytest.approx(3 * math.log(4 / 3), rel=1e-9)
@@ -165,9 +165,8 @@ def lda_setup(spark):
 def test_lda_seed_reproducible(spark, lda_setup):
     corpus, model, lda1 = lda_setup
     lda2 = train_lda(corpus, k=3, max_iter=15, seed=42)
-    vocab = vocabulary_table(model, spark)
-    t1 = describe_topics_with_terms(lda1, vocab, 5).orderBy("topic").collect()
-    t2 = describe_topics_with_terms(lda2, vocab, 5).orderBy("topic").collect()
+    t1 = describe_topics_with_terms(lda1, model.vocabulary, 5).orderBy("topic").collect()
+    t2 = describe_topics_with_terms(lda2, model.vocabulary, 5).orderBy("topic").collect()
     assert [r["terms"] for r in t1] == [r["terms"] for r in t2]
 
 

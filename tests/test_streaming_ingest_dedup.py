@@ -206,11 +206,7 @@ def test_streaming_lda_serving_matches_batch(spark, tmp_path):
 
     from spark_text_clustering_spark.catalog import load_table
     from spark_text_clustering_spark.ml.lda import score_documents, train_lda
-    from spark_text_clustering_spark.ml.vectorize import (
-        _preprocess,
-        apply_idf_floor,
-        vectorize,
-    )
+    from spark_text_clustering_spark.ml.vectorize import featurize, vectorize
     from spark_text_clustering_spark.streaming.model_serving import (
         serve_lda_topics_stream,
     )
@@ -248,13 +244,7 @@ def test_streaming_lda_serving_matches_batch(spark, tmp_path):
     vec, model = vectorize(train_docs, vocab_size=50_000, min_doc_freq=2)
     corpus = vec.select("doc_id", "tfidf")
     lda = train_lda(corpus, k=3, max_iter=5, optimizer="em", seed=42)
-    idf_values = np.asarray(model.stages[-1].idf.toArray())
-    feat = model.transform(_preprocess(train_docs, False))
-    from pyspark.sql import functions as F
-
-    feat = apply_idf_floor(
-        feat.where(F.size("tokens") > 0), idf_values
-    ).select("doc_id", "tfidf")
+    feat = featurize(train_docs, model).select("doc_id", "tfidf")
     want = {
         r["doc_id"]: (r["main_topic"], tuple(r["topic_dist"]))
         for r in score_documents(lda, feat).collect()

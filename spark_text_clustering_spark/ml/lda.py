@@ -35,6 +35,7 @@ import os
 import time
 
 import numpy as np
+import pandas as pd
 
 from pyspark.ml.clustering import LDA, LocalLDAModel
 from pyspark.sql import DataFrame, SparkSession
@@ -103,11 +104,30 @@ def describe_topics_with_terms(model, vocabulary: list[str], max_terms: int = 10
     vocabulary list (the reference's driver-side ``vocabArray(idx)``,
     LDAClustering.scala:81-92). Both sides are model-sized."""
     topics = model.describeTopics(max_terms)
-    rows = [
-        (r["topic"], [vocabulary[i] for i in r["termIndices"]])
-        for r in topics.select("topic", "termIndices").collect()
-    ]
-    return topics.sparkSession.createDataFrame(rows, "topic int, terms array<string>")
+    rows = topics.select("topic", "termIndices").collect()
+    terms = pd.DataFrame({
+        "topic": [r["topic"] for r in rows],
+        "terms": [[vocabulary[i] for i in r["termIndices"]] for r in rows],
+    })
+    return _local_frame(terms, "topic int, terms array<string>")
+
+
+def _local_frame(pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """A driver-built frame through Arrow: from Python tuples it would
+    start a Python worker job just to unpickle a handful of rows."""
+    return SparkSession.active().createDataFrame(pdf, schema)
+
+
+def scoring_model(model) -> LocalLDAModel:
+    """The model every scorer runs: ``toLocal()`` with the trained params
+    copied on. A ``DistributedLDAModel``'s transform re-seeds its
+    inference on every call; the local model's is seeded by its ``seed``
+    param, so the same document scores the same on every call. The Python
+    wrapper ``toLocal()`` returns carries default params (k=10, a random
+    seed), which its save and transform would use over the trained ones."""
+    local = model.toLocal() if model.isDistributed() else model
+    model._copyValues(local)
+    return local
 
 
 def score_documents(model, corpus: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -149,16 +169,13 @@ def save_model(model, vectorizer: Vectorizer, base_dir: str, lang: str = "EN") -
     (LDAClustering.scala:70-72), plus the ``scoring/`` artifact."""
     path = os.path.join(base_dir, f"LdaModel_{lang}_{int(time.time() * 1000)}")
     model.write().overwrite().save(path)
-    local = model.toLocal() if model.isDistributed() else model
-    # the Python wrapper toLocal() returns carries default params (k=10, a
-    # random seed), which its save would write over the trained ones
-    model._copyValues(local)
-    local.write().save(os.path.join(path, "scoring", "model"))
+    scoring_model(model).write().save(os.path.join(path, "scoring", "model"))
     v = vectorizer
-    row = (SCORING_FORMAT_VERSION, v.vocabulary, v.idf.tolist(), v.stopwords, v.lemmatize)
-    SparkSession.active().createDataFrame([row], _VECTORIZER_ROW).write.parquet(
-        os.path.join(path, "scoring", "vectorizer")
-    )
+    row = pd.DataFrame({
+        "format_version": [SCORING_FORMAT_VERSION], "vocabulary": [v.vocabulary],
+        "idf": [v.idf], "stopwords": [v.stopwords], "lemmatize": [v.lemmatize],
+    })
+    _local_frame(row, _VECTORIZER_ROW).write.parquet(os.path.join(path, "scoring", "vectorizer"))
     return path
 
 

@@ -9,7 +9,13 @@ from pyspark.sql import functions as F
 
 from .._registry import Registry
 from ..catalog import load_table
-from .lda import describe_topics_with_terms, score_documents, topic_report, train_lda
+from .lda import (
+    describe_topics_with_terms,
+    score_documents,
+    scoring_model,
+    topic_report,
+    train_lda,
+)
 from .vectorize import EmptyCorpusError, vectorize
 
 REG = Registry()
@@ -41,6 +47,13 @@ def _trained_lda(spark: SparkSession, sf_dir: str):
     if key not in _memo:
         df, _model = _vectorized(spark, sf_dir)
         _memo[key] = train_lda(df.select("doc_id", "tfidf"), max_iter=_QUERY_MAX_ITER)
+    return _memo[key]
+
+
+def _scoring_lda(spark: SparkSession, sf_dir: str):
+    key = (id(spark), sf_dir, "scoring")
+    if key not in _memo:
+        _memo[key] = scoring_model(_trained_lda(spark, sf_dir))
     return _memo[key]
 
 
@@ -85,8 +98,7 @@ def lda_doc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         df, _ = _vectorized(spark, sf_dir)
     except EmptyCorpusError:
         return _empty(spark, "main_topic int, n_docs long, docs string")
-    lda_model = _trained_lda(spark, sf_dir)
-    scored = score_documents(lda_model, df.select("doc_id", "tfidf"))
+    scored = score_documents(_scoring_lda(spark, sf_dir), df.select("doc_id", "tfidf"))
     out = topic_report(scored)
     # comma-joined atomic doc list for external hashers
     return out.withColumn("docs", F.concat_ws(",", "docs"))

@@ -16,9 +16,14 @@ stem (:134-137) is not run (ROADMAP item 7).
 
 Scale: every step is a narrow map except the vocabulary ranking (one
 aggregation shuffle) and IDF.fit (one treeAggregate for document
-frequencies). The only driver-held state is the vocab/idf arrays: model
-parameters bounded by vocabSize, not corpus size, sent once per executor
-(the reference closure-captures its vocab map into every task, J1).
+frequencies). Each pass cleans, tokenizes and stopword-filters a document
+once, as the reference does: P8 drops empty docs with a generator, not a
+``Filter``, because Catalyst pushes a filter on ``tokens`` below the
+projections that compute it and evaluates the whole chain again inside
+the predicate (``_drop_empty``). The only driver-held state is the
+vocab/idf arrays: model parameters bounded by vocabSize, not corpus size,
+sent once per executor (the reference closure-captures its vocab map into
+every task, J1).
 """
 
 from __future__ import annotations
@@ -119,18 +124,27 @@ def build_deterministic_vocab(tokens_df: DataFrame, vocab_size: int) -> list[str
 
 
 def _preprocess(docs: DataFrame, lemmatize: bool) -> DataFrame:
-    cleaned = clean_documents(docs).where(F.length("clean_text") > 0)
-    if lemmatize:
-        cleaned = lemmatize_documents(cleaned).where(F.length("clean_text") > 0)
-    return cleaned
+    # null text would fail the tokenizer UDF; empty clean text tokenizes to
+    # [] and P8 drops it
+    cleaned = clean_documents(docs.where(F.col("text").isNotNull()))
+    return lemmatize_documents(cleaned) if lemmatize else cleaned
+
+
+def _drop_empty(tokens: DataFrame) -> DataFrame:
+    # a generator, not a Filter: Catalyst pushes a filter below the projections and re-runs them
+    kept = F.explode(F.when(F.size("tokens") > 0, F.array(F.col("tokens"))))
+    return tokens.withColumn("tokens", kept)
 
 
 def _tokens(docs: DataFrame, lemmatize: bool, stopwords: list[str]) -> DataFrame:
     """P2 (+P3) → P5/P6 → P8 (LDAClustering.scala:139): docs with no
     surviving token are dropped before the vocab build and IDF fit, so
     document frequencies use the surviving corpus size m (the reference's
-    idf is computed on the filtered corpus)."""
-    return _tokenize(_preprocess(docs, lemmatize), stopwords).where(F.size("tokens") > 0)
+    idf is computed on the filtered corpus). Each step runs once per
+    document per pass: P8 is a generator, because a ``Filter`` on
+    ``tokens`` is pushed below the tokenizer and clean projections and
+    evaluates them again inside its predicate."""
+    return _drop_empty(_tokenize(_preprocess(docs, lemmatize), stopwords))
 
 
 def _count_model(vocabulary: list[str]) -> CountVectorizerModel:

@@ -175,18 +175,19 @@ def serve_lda_topics_stream(
     ``model.transform`` (the rebuild of LDALoader's per-book loop) and
     append (doc_id, topic_dist, main_topic) to parquet. Every stage is a
     frozen per-row transform, so batching cannot change an assignment:
-    streamed main topics are identical to batch and the distributions
-    agree to variational-inference tolerance (LDAModel.transform uses a
-    randomized gamma init; ~1e-5 observed) — asserted in
-    tests/test_streaming_ingest_dedup.py."""
+    epochs score through ``scoring_model`` (its inference is seeded per
+    document), so streamed topic distributions equal batch scoring's
+    exactly — asserted in tests/test_streaming_ingest_dedup.py."""
     from ..catalog import load_table
-    from ..ml.lda import score_documents, train_lda
+    from ..ml.lda import score_documents, scoring_model, train_lda
     from ..ml.vectorize import featurize, vectorize
 
     train_docs = load_table(spark, sf_train_dir, "documents")
     vec, vectorizer = vectorize(train_docs, vocab_size=50_000, min_doc_freq=2)
     corpus = vec.select("doc_id", "tfidf")
-    lda_model = train_lda(corpus, k=k, max_iter=max_iter, optimizer="em", seed=42)
+    lda_model = scoring_model(
+        train_lda(corpus, k=k, max_iter=max_iter, optimizer="em", seed=42)
+    )
 
     def _score_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         feat = featurize(batch_df, vectorizer).select("doc_id", "tfidf")

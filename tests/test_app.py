@@ -11,7 +11,11 @@ import pytest
 
 from spark_text_clustering_spark import app
 from spark_text_clustering_spark.app import Params, run_scoring, run_training
-from spark_text_clustering_spark.ml.lda import SCORING_FORMAT_VERSION, load_newest_model
+from spark_text_clustering_spark.ml.lda import (
+    _VECTORIZER_ROW,
+    SCORING_FORMAT_VERSION,
+    load_newest_model,
+)
 from spark_text_clustering_spark.sources.text_corpus import read_stopwords, read_text_corpus
 
 from .conftest import SF_SMALL
@@ -186,6 +190,17 @@ def test_scoring_rejects_other_format_version(spark, corpus_dir, trained_model, 
     shutil.rmtree(row_dir)
     spark.createDataFrame([tuple(row[f.name] for f in schema)], schema).write.parquet(row_dir)
     _assert_scoring_rejects(spark, corpus_dir, base, other, str(tmp_path / "report"))
+
+
+def test_scoring_vectorizer_row_schema(spark, trained_model):
+    """The saved vectorizer row is one row with the ``_VECTORIZER_ROW``
+    parquet schema, read back without a schema given."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    df = spark.read.parquet(os.path.join(trained_model, "scoring", "vectorizer"))
+    assert df.schema == _parse_datatype_string(_VECTORIZER_ROW)
+    row = df.collect()
+    assert len(row) == 1 and row[0]["format_version"] == SCORING_FORMAT_VERSION
 
 
 def test_train_with_lemmatize_stage(spark, corpus_dir, tmp_path_factory):

@@ -11,8 +11,10 @@ from spark_text_clustering_spark.catalog import load_table
 from spark_text_clustering_spark.ml.vectorize import (
     IDF_FLOOR,
     _tokenize,
+    _tokens,
     build_deterministic_vocab,
     clean_documents,
+    featurize,
     fit_vectorizer,
     vectorize,
 )
@@ -151,6 +153,53 @@ def test_empty_doc_dropped(spark, mini):
     df, _ = vectorize(mini, vocab_size=100)
     ids = {r["doc_id"] for r in df.select("doc_id").collect()}
     assert ids == {0, 1, 3}  # doc 2 (all stopwords) dropped (P8)
+
+
+P8_FIT = [
+    (0, "horses gallop across green meadows"),
+    (1, "horses gallop quickly"),
+    (2, None),
+    (3, ""),
+]
+P8_CASES = [
+    (10, None),
+    (11, ""),
+    (12, "?!... ,;"),  # punctuation only
+    (13, "this that with from have"),  # stopwords only
+    (14, "zebras xylophones quartzite"),  # every token out of vocabulary
+    (15, "horses gallop"),
+]
+
+
+@pytest.mark.parametrize("lemmatize", [False, True], ids=["plain", "lemmatize"])
+def test_empty_doc_drop_semantics(spark, lemmatize):
+    """P8 keeps a document iff a token survives P6: null, empty,
+    punctuation-only and stopword-only text is dropped, in fitting and in
+    featurizing; a document whose tokens are all out of vocabulary is kept
+    with an all-zero ``tf``."""
+    fit = spark.createDataFrame(P8_FIT, "doc_id long, text string")
+    v = fit_vectorizer(fit, vocab_size=100, min_doc_freq=1, lemmatize=lemmatize)
+    docs = spark.createDataFrame(P8_CASES, "doc_id long, text string")
+    got = {r["doc_id"]: r["tf"] for r in featurize(docs, v).collect()}
+    assert sorted(got) == [14, 15]
+    assert got[14].numNonzeros() == 0
+    assert got[15].numNonzeros() == 2
+
+
+@pytest.mark.parametrize("lemmatize", [False, True], ids=["plain", "lemmatize"])
+def test_text_chain_evaluated_once(spark, lemmatize):
+    """P2 → P5 → P6 run once per document per pass: the optimized plans of
+    the vocabulary build's input and of ``featurize`` hold the clean
+    chain's two ``regexp_replace`` calls once, and one UDF per ML stage
+    (tokenizer, remover; plus counts and the IDF product in ``featurize``).
+    A P8 ``Filter`` on ``tokens`` would be pushed below those projections
+    and evaluate the chain again inside its predicate."""
+    fit = spark.createDataFrame(P8_FIT, "doc_id long, text string")
+    v = fit_vectorizer(fit, vocab_size=100, min_doc_freq=1, lemmatize=lemmatize)
+    for df, n_udfs in ((_tokens(fit, lemmatize, v.stopwords), 2), (featurize(fit, v), 4)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("regexp_replace(") == 2, plan
+        assert plan.count("UDF(") == n_udfs, plan
 
 
 @pytest.fixture(scope="module")

@@ -197,15 +197,14 @@ def test_minhash_store_old_layout_fails_loudly(spark, tmp_path):
         streaming_ingest_dedup(spark, src, store, str(tmp_path / "ckpt_r14"), minhash=True)
 
 
-def test_streaming_lda_serving_matches_batch(spark, tmp_path):
+def test_streaming_lda_serving_matches_batch(spark, tmp_path, monkeypatch):
     """LDA topic scoring served on a stream (the reference's own serving
     path) must reproduce batch scoring exactly: every stage after
     training is a frozen per-doc transform, so batch boundaries cannot
     change a single topic distribution."""
-    import numpy as np
-
     from spark_text_clustering_spark.catalog import load_table
-    from spark_text_clustering_spark.ml.lda import score_documents, train_lda
+    from spark_text_clustering_spark.ml import lda as lda_mod
+    from spark_text_clustering_spark.ml.lda import score_documents, scoring_model
     from spark_text_clustering_spark.ml.vectorize import featurize, vectorize
     from spark_text_clustering_spark.streaming.model_serving import (
         serve_lda_topics_stream,
@@ -231,6 +230,13 @@ def test_streaming_lda_serving_matches_batch(spark, tmp_path):
     _write_file(spark, src, "f1", _doc_rows(docs, 40, 80))
     _write_file(spark, src, "f2", _doc_rows(docs, 80, 120))
 
+    served = []  # the local model the stream scores with
+
+    def capture(model):
+        served.append(scoring_model(model))
+        return served[-1]
+
+    monkeypatch.setattr(lda_mod, "scoring_model", capture)
     streamed = serve_lda_topics_stream(
         spark, src, train_dir, out, ckpt, k=3, max_iter=5
     )
@@ -239,30 +245,17 @@ def test_streaming_lda_serving_matches_batch(spark, tmp_path):
         for r in streamed.collect()
     }
 
-    # batch twin with the identical seeds/params
+    # batch twin: one pass over every doc with the served model (a second
+    # EM fit may differ in the last bit: it sums in task completion order)
     train_docs = load_table(spark, train_dir, "documents")
-    vec, model = vectorize(train_docs, vocab_size=50_000, min_doc_freq=2)
-    corpus = vec.select("doc_id", "tfidf")
-    lda = train_lda(corpus, k=3, max_iter=5, optimizer="em", seed=42)
-    feat = featurize(train_docs, model).select("doc_id", "tfidf")
+    _, vectorizer = vectorize(train_docs, vocab_size=50_000, min_doc_freq=2)
+    feat = featurize(train_docs, vectorizer).select("doc_id", "tfidf")
     want = {
         r["doc_id"]: (r["main_topic"], tuple(r["topic_dist"]))
-        for r in score_documents(lda, feat).collect()
+        for r in score_documents(served[0], feat).collect()
     }
-    assert set(got) == set(want) and len(got) > 0
-    n_clear = 0
-    for d in got:
-        # LDAModel.transform's variational loop uses a randomized gamma
-        # init, so distributions are reproducible only to inference
-        # tolerance (~1e-5 observed) — the honest equivalence bound; the
-        # argmax must match wherever the batch top-2 gap clears that
-        # tolerance (a true near-tie may legitimately flip)
-        assert np.allclose(got[d][1], want[d][1], atol=1e-3)
-        top2 = sorted(want[d][1], reverse=True)[:2]
-        if top2[0] - top2[1] > 1e-3:
-            assert got[d][0] == want[d][0], (d, got[d], want[d])
-            n_clear += 1
-    assert n_clear > 0  # the assertion must have bitten somewhere
+    assert len(got) > 0
+    assert got == want
 
 
 def test_streaming_lang_id_serving_replay_idempotent(spark, tmp_path):

@@ -21,7 +21,5 @@ oracle in ``registry.ORACLES`` where ANSI-SQL-expressible.
 
 __version__ = "0.1.0"
 
-from . import _zipimport  # noqa: F401  (cheap per-task import-cache reset in workers)
-
 from .session import get_session  # noqa: F401
 from .catalog import load_table, SCHEMAS  # noqa: F401

@@ -109,13 +109,8 @@ def describe_topics_with_terms(model, vocabulary: list[str], max_terms: int = 10
         "topic": [r["topic"] for r in rows],
         "terms": [[vocabulary[i] for i in r["termIndices"]] for r in rows],
     })
-    return _local_frame(terms, "topic int, terms array<string>")
-
-
-def _local_frame(pdf: pd.DataFrame, schema: str) -> DataFrame:
-    """A driver-built frame through Arrow: from Python tuples it would
-    start a Python worker job just to unpickle a handful of rows."""
-    return SparkSession.active().createDataFrame(pdf, schema)
+    # A pandas frame goes through Arrow; Python tuples would start a Python worker job.
+    return topics.sparkSession.createDataFrame(terms, "topic int, terms array<string>")
 
 
 def scoring_model(model) -> LocalLDAModel:
@@ -175,7 +170,9 @@ def save_model(model, vectorizer: Vectorizer, base_dir: str, lang: str = "EN") -
         "format_version": [SCORING_FORMAT_VERSION], "vocabulary": [v.vocabulary],
         "idf": [v.idf], "stopwords": [v.stopwords], "lemmatize": [v.lemmatize],
     })
-    _local_frame(row, _VECTORIZER_ROW).write.parquet(os.path.join(path, "scoring", "vectorizer"))
+    # A pandas frame goes through Arrow; Python tuples would start a Python worker job.
+    frame = SparkSession.active().createDataFrame(row, _VECTORIZER_ROW)
+    frame.write.parquet(os.path.join(path, "scoring", "vectorizer"))
     return path
 
 

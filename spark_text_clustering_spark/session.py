@@ -15,9 +15,6 @@ Scale notes (100 TB / 1000-executor design):
   ~800k tasks — fine for a 1000-executor cluster, and AQE handles the rest.
 * Arrow is enabled for every pandas-UDF boundary (the only Python hot paths
   in this engine are Arrow-batched, never row-at-a-time).
-* Python workers fork from ``_daemon``, which keeps PySpark's per-task
-  import-cache reset from re-reading every zip on the worker path
-  (``_zipimport``).
 * Session timezone pinned to UTC so timestamp semantics are stable across
   driver environments (and match DuckDB's naive timestamps in the oracle).
 """
@@ -29,20 +26,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
-
-def _workers_import_package() -> bool:
-    """A worker daemon starts with ``python -m`` in the driver's working
-    directory and the driver's PYTHONPATH: this package must be
-    importable from there to serve as the daemon module."""
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
-    if any(p and os.path.abspath(p) == root for p in paths):
-        return True
-    spec = importlib.util.find_spec("pyspark")  # installed alongside pyspark
-    return spec is not None and os.path.dirname(os.path.dirname(spec.origin)) == root
 
 
 def get_session(
@@ -71,8 +54,6 @@ def get_session(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if _workers_import_package():
-        builder = builder.config("spark.python.daemon.module", f"{__package__}._daemon")
     return builder.getOrCreate()
 
 
